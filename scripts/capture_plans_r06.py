@@ -84,7 +84,8 @@ def main() -> None:
          new_dd._small_star(new_dd._large_star(e), oriented=True))
 
     # warm topk: old fixed task wave vs cache-adaptive task wave;
-    # cold WAND: driver-collected corpus stats vs in-plan corpus_df
+    # cold WAND: a hand-built _wand_plan vs bm25_topk_wand (which now
+    # passes the store's memoized corpus stats as literals too)
     import shutil
     import tempfile
 

@@ -133,12 +133,12 @@ def build_ann_index(
 
 
 def load_centroids(spark: SparkSession, store: IndexStore) -> np.ndarray:
-    rows = spark.read.parquet(store.path("ann_centroids")).orderBy("cluster").collect()
+    rows = store.read(spark, "ann_centroids").orderBy("cluster").collect()
     return np.stack([np.asarray(r["c"], dtype=np.float64) for r in rows])
 
 
 def load_codebooks(spark: SparkSession, store: IndexStore) -> np.ndarray:
-    rows = spark.read.parquet(store.path("ann_codebooks")).orderBy("sub", "code").collect()
+    rows = store.read(spark, "ann_codebooks").orderBy("sub", "code").collect()
     m = max(r["sub"] for r in rows) + 1
     n_codes = max(r["code"] for r in rows) + 1
     dsub = len(rows[0]["c"])
@@ -240,7 +240,7 @@ def ann_topk_ivf(
     partitioned by cluster so the probe prunes at file level)."""
     from tangent_spark.operators.similarity import cosine_topk_ivf
 
-    indexed = spark.read.parquet(store.path("ann_vectors"))
+    indexed = store.read(spark, "ann_vectors")
     return cosine_topk_ivf(
         indexed,  # only `indexed`/`centroids` are read below
         queries,
@@ -327,7 +327,7 @@ def ann_topk_ivf_filtered(
     head = cand.limit(max_driver_candidates + 1).toPandas()
     if len(head) == 0:
         return empty
-    vectors = spark.read.parquet(store.path("ann_vectors"))
+    vectors = store.read(spark, "ann_vectors")
     qs = spark.createDataFrame(
         [(r["query_id"], r["q"]) for r in qrows], "query_id long, q array<double>"
     )
@@ -418,8 +418,8 @@ def ann_topk_pq(
     codes, exact re-rank of the top `refine` candidates against the
     stored float vectors (id semi-join — never a float scan)."""
     B = load_codebooks(spark, store)
-    codes = spark.read.parquet(store.path("ann_codes"))
-    vectors = spark.read.parquet(store.path("ann_vectors")).select(
+    codes = store.read(spark, "ann_codes")
+    vectors = store.read(spark, "ann_vectors").select(
         "vec_id", F.col("v").alias("embedding")
     )
     return cosine_topk_pq(

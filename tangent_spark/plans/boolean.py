@@ -1049,20 +1049,15 @@ def boolean_topk(
 
     Raises ValueError if the query has no positive clause, or if it
     carries a phrase but the index was built without positions."""
-    from tangent_spark.plans.search import load_deleted_ids
+    from tangent_spark.plans.search import _cold_sources
 
-    cs = store.read(spark, "corpus_stats").collect()[0]
     return _boolean_plan(
         spark,
         store,
         query,
         k,
-        postings=store.read(spark, "postings"),
-        term_stats=store.read(spark, "term_stats"),
-        n_docs=int(cs["n_docs"]),
-        avgdl=float(cs["avgdl"]) if cs["avgdl"] else 1.0,
         decode_counter=decode_counter,
-        deleted=load_deleted_ids(spark, store),
+        **_cold_sources(spark, store),
         min_should_match=min_should_match,
         unordered_phrases=unordered_phrases,
     )
@@ -1268,7 +1263,7 @@ def _boolean_plan(
         pos = (
             positions
             if positions is not None
-            else spark.read.parquet(store.path("positions"))
+            else store.read(spark, "positions")
         )
         for p, slop in q.phrases:
             scored = scored.join(
@@ -1366,7 +1361,7 @@ def boolean_matches(
     with filtered_topk semantics). The building block for aggregations
     over matches that are not facet-shaped (e.g.
     plans.sigterms.significant_terms)."""
-    from tangent_spark.plans.search import load_deleted_ids
+    from tangent_spark.plans.search import _cold_sources
 
     empty = spark.createDataFrame([], "doc_id long")
     docs = store.read(spark, "docs")
@@ -1379,18 +1374,13 @@ def boolean_matches(
     q = parse_boolean_query(query, cfg)
     if resolve_mm(min_should_match, len(set(q.should))) > len(set(q.should)):
         return empty
-    cs = store.read(spark, "corpus_stats").collect()[0]
     matches = _boolean_plan(
         spark,
         store,
         query,
         0,
-        postings=store.read(spark, "postings"),
-        term_stats=store.read(spark, "term_stats"),
-        n_docs=int(cs["n_docs"]),
-        avgdl=float(cs["avgdl"]) if cs["avgdl"] else 1.0,
         decode_counter=decode_counter,
-        deleted=load_deleted_ids(spark, store),
+        **_cold_sources(spark, store),
         ext_cand=ids,
         cand_df=cand_df,
         return_matches=True,
@@ -1421,7 +1411,7 @@ def _facet_values(
     way). Returns None for a provably-empty match set (no `where`
     candidates, or mm above the should count) — callers shape their
     own empty frame."""
-    from tangent_spark.plans.search import load_deleted_ids
+    from tangent_spark.plans.search import _cold_sources
 
     docs = store.read(spark, "docs")
     ids, cand_df = None, None
@@ -1438,18 +1428,13 @@ def _facet_values(
         fmap = _facet_map(vdocs, by, max_driver_docs)
         if fmap is not None:
             facet = (vdocs.schema[by], fmap[0], fmap[1], rows_counter, mode)
-    cs = store.read(spark, "corpus_stats").collect()[0]
     matches = _boolean_plan(
         spark,
         store,
         query,
         0,
-        postings=store.read(spark, "postings"),
-        term_stats=store.read(spark, "term_stats"),
-        n_docs=int(cs["n_docs"]),
-        avgdl=float(cs["avgdl"]) if cs["avgdl"] else 1.0,
         decode_counter=decode_counter,
-        deleted=load_deleted_ids(spark, store),
+        **_cold_sources(spark, store),
         ext_cand=ids,
         cand_df=cand_df,
         return_matches=True,
@@ -1957,25 +1942,20 @@ def filtered_topk(
 
     Raises AnalysisException if `where` references a column the index
     wasn't built with (IndexConfig.meta_cols)."""
-    from tangent_spark.plans.search import load_deleted_ids
+    from tangent_spark.plans.search import _cold_sources
 
     route, ids, cand_df = _route_filter(
         spark, store.read(spark, "docs"), where, max_driver_candidates
     )
     if route == "empty":
         return spark.createDataFrame([], _OUT_SCHEMA)
-    cs = store.read(spark, "corpus_stats").collect()[0]
     return _boolean_plan(
         spark,
         store,
         query,
         k,
-        postings=store.read(spark, "postings"),
-        term_stats=store.read(spark, "term_stats"),
-        n_docs=int(cs["n_docs"]),
-        avgdl=float(cs["avgdl"]) if cs["avgdl"] else 1.0,
         decode_counter=decode_counter,
-        deleted=load_deleted_ids(spark, store),
+        **_cold_sources(spark, store),
         ext_cand=ids,
         cand_df=cand_df,
         min_should_match=min_should_match,

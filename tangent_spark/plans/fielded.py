@@ -169,6 +169,7 @@ def fielded_topk(
     DisjunctionMaxQuery (use dismax_topk for the named surface)."""
     from tangent_spark.plans.search import (
         _WAND_SCHEMA,
+        _cursor,
         _score_shard,
         load_deleted_ids,
         query_terms,
@@ -224,10 +225,10 @@ def fielded_topk(
             ].cast("long").alias("dmax")
         )
     qstats = (
-        spark.read.parquet(store.path("term_stats"))
+        store.read(spark, "term_stats")
         .filter(F.col("term").isin(prefixed))
         .withColumn("field", F.substring_index("term", FIELD_SEP, 1))
-        .join(F.broadcast(spark.read.parquet(store.path("field_stats"))), "field")
+        .join(F.broadcast(store.read(spark, "field_stats")), "field")
         .join(F.broadcast(bdf), "field")
         .select(*cols)
     )
@@ -236,7 +237,7 @@ def fielded_topk(
         cfg,
         k,
         deleted=load_deleted_ids(spark, store),
-        after=(float(after[0]), int(after[1])) if after is not None else None,
+        after=_cursor(after),
         dismax_tie=float(tie) if tie is not None else None,
     )
 
@@ -244,7 +245,7 @@ def fielded_topk(
         return kern(pdf)
 
     local = (
-        spark.read.parquet(store.path("postings"))
+        store.read(spark, "postings")
         .filter(F.col("term").isin(prefixed))
         .join(F.broadcast(qstats), "term")
         .groupBy("shard")
@@ -399,10 +400,10 @@ def field_query_topk(
         "avgdl",
     ] + ([F.col("dmax")] if tie is not None else [])
     qstats = (
-        spark.read.parquet(store.path("term_stats"))
+        store.read(spark, "term_stats")
         .join(F.broadcast(cdf), "term")
         .withColumn("field", F.substring_index("term", FIELD_SEP, 1))
-        .join(F.broadcast(spark.read.parquet(store.path("field_stats"))), "field")
+        .join(F.broadcast(store.read(spark, "field_stats")), "field")
         .select(*stats_cols)
     )
     kern = _score_shard(
@@ -419,7 +420,7 @@ def field_query_topk(
 
     prefixed = sorted({t for t, _ in rows})
     local = (
-        spark.read.parquet(store.path("postings"))
+        store.read(spark, "postings")
         .filter(F.col("term").isin(prefixed))
         .join(F.broadcast(qstats), "term")
         .groupBy("shard")

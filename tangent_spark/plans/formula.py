@@ -277,7 +277,7 @@ def dice_topk_exprs(
     concrete, wildcard, qtc = query_tuple_multiset(query_mathml, cfg)
     if qtc == 0:
         return spark.createDataFrame([], "expr_id long, slt string, score double, expr_tc int")
-    postings = spark.read.parquet(store.path("f_postings"))
+    postings = store.read(spark, "f_postings")
     parts = []
     if concrete:
         qdf = spark.createDataFrame(
@@ -300,7 +300,7 @@ def dice_topk_exprs(
         matched = []
         if to_pats:
             src = (
-                spark.read.parquet(store.path("f_postings_to"))
+                store.read(spark, "f_postings_to")
                 if store.stage_done("f_postings_to")
                 else postings
             )
@@ -328,7 +328,7 @@ def dice_topk_exprs(
             .agg(F.count("*").alias("sz"))
             .collect()
         }
-        n_exprs = spark.read.parquet(store.path("f_dict")).count()
+        n_exprs = int(store.counters()["f_dict"]["unique_exprs"])
         dense = wildcard_dense_flags(wildcard, sizes, n_exprs)
 
         def wild_kernel(pdf):
@@ -360,7 +360,7 @@ def dice_topk_exprs(
     for p in parts[1:]:
         contribs = contribs.unionByName(p)
     cc = contribs.groupBy("expr_id").agg(F.sum("contrib").alias("cc"))
-    fdict = spark.read.parquet(store.path("f_dict"))
+    fdict = store.read(spark, "f_dict")
     scored = cc.join(fdict, "expr_id").withColumn(
         "score", 2.0 * F.col("cc") / (F.col("expr_tc") + F.lit(qtc))
     )
@@ -377,7 +377,7 @@ def dice_topk_docs(
     """Q11 + R10: expand top-k expressions to documents and rank docs by
     (best formula score, total score), ties on doc_id ascending."""
     exprs = dice_topk_exprs(spark, store, query_mathml, k)
-    docs = spark.read.parquet(store.path("f_docs"))
+    docs = store.read(spark, "f_docs")
     return (
         exprs.join(docs, "expr_id")
         .groupBy("doc_id")

@@ -215,25 +215,16 @@ def fuzzy_topk(
     then the standard ONE-job block-max WAND plan (deleted docs masked,
     searchAfter paging supported — the expanded query is an ordinary
     disjunction from the kernel's point of view)."""
-    from tangent_spark.plans.search import _wand_plan, load_deleted_ids
+    from tangent_spark.plans.search import _cold_sources, _cursor, _wand_plan
 
     cfg = store.get_config()
-    ts = spark.read.parquet(store.path("term_stats"))
     qts = fuzzy_terms(
-        ts, query, cfg.tokenizer, max_expansions, prefix_length, transpositions
+        store.read(spark, "term_stats"), query, cfg.tokenizer, max_expansions,
+        prefix_length, transpositions,
     )
     if not qts:
         return spark.createDataFrame([], "doc_id long, score double")
-    cs = spark.read.parquet(store.path("corpus_stats")).collect()[0]
     return _wand_plan(
-        spark.read.parquet(store.path("postings")),
-        ts,
-        qts,
-        int(cs["n_docs"]),
-        float(cs["avgdl"]) if cs["avgdl"] else 1.0,
-        cfg,
-        k,
-        with_metrics,
-        deleted=load_deleted_ids(spark, store),
-        after=(float(after[0]), int(after[1])) if after is not None else None,
+        qts=qts, cfg=cfg, k=k, with_metrics=with_metrics, after=_cursor(after),
+        **_cold_sources(spark, store),
     )

@@ -172,7 +172,7 @@ def grouped_topk(
             "raise the cap to broadcast the doc->group map (see module "
             "docstring for the two-phase alternative at that scale)"
         )
-    cs = store.read(spark, "corpus_stats").collect()[0]
+    cs = store.corpus_stats(spark)
     N = float(cs["n_docs"])
     avgdl = float(cs["avgdl"]) if cs["avgdl"] else 1.0
     qstats = (

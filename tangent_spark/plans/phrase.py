@@ -340,7 +340,7 @@ def phrase_topk(
         return spark.createDataFrame([], "doc_id long, phrase_tf int")
     from tangent_spark.plans.search import filter_deleted, load_deleted_ids
 
-    pos = spark.read.parquet(store.path("positions"))
+    pos = store.read(spark, "positions")
     return (
         filter_deleted(
             phrase_match_positions(pos, terms, slop, in_order=in_order),
@@ -404,7 +404,7 @@ def span_first_topk(
         return spark.createDataFrame([], "doc_id long, span_tf int")
     from tangent_spark.plans.search import filter_deleted, load_deleted_ids
 
-    pos = spark.read.parquet(store.path("positions"))
+    pos = store.read(spark, "positions")
     return (
         filter_deleted(
             span_first_match(pos, terms, end), load_deleted_ids(spark, store)
@@ -506,7 +506,7 @@ def phrase_prefix_topk(
     lead = _phrase_terms(" ".join(parts[:-1]), cfg.tokenizer)
     from tangent_spark.plans.search import filter_deleted, load_deleted_ids
 
-    pos = spark.read.parquet(store.path("positions"))
+    pos = store.read(spark, "positions")
     out = phrase_prefix_match(
         pos, store.read(spark, "term_stats"), lead, prefix, slop,
         max_expansions,
@@ -613,7 +613,7 @@ def snippet_topk(
     # subtree would otherwise execute twice (window candidates + join)
     top_rows = bm25_topk_wand(spark, store, query, k).collect()
     top = spark.createDataFrame(top_rows, "doc_id long, score double")
-    pos = spark.read.parquet(store.path("positions"))
+    pos = store.read(spark, "positions")
     wins = highlight_windows(pos, qts, candidates=top)
     return top.join(wins, "doc_id", "left").orderBy(
         F.desc("score"), F.asc("doc_id")

@@ -102,7 +102,7 @@ def rerank_docs(
 ) -> DataFrame:
     """R10: per-document aggregation of reranked formula scores."""
     exprs = rerank_topk(spark, store, query_mathml, k * 10, prefilter_k)
-    docs = spark.read.parquet(store.path("f_docs"))
+    docs = store.read(spark, "f_docs")
     return (
         exprs.join(docs, "expr_id")
         .groupBy("doc_id")

@@ -117,7 +117,7 @@ def apply_phrase_rescore(
     uniq = sorted(set(p_terms))
     dfs = {
         r["term"]: int(r["df"])
-        for r in spark.read.parquet(store.path("term_stats"))
+        for r in store.read(spark, "term_stats")
         .filter(F.col("term").isin(uniq))
         .select("term", "df")
         .collect()
@@ -125,7 +125,7 @@ def apply_phrase_rescore(
     if len(dfs) < len(uniq):  # an OOV member can never complete the phrase
         return base_only()
 
-    cs = spark.read.parquet(store.path("corpus_stats")).collect()[0]
+    cs = store.corpus_stats(spark)
     N = float(cs["n_docs"])
     avgdl = float(cs["avgdl"]) if cs["avgdl"] else 1.0
     idf_p = sum(
@@ -136,7 +136,7 @@ def apply_phrase_rescore(
     # both scans below are bounded by the window: doc_id IN (<= window
     # ids) pushes to the parquet reader; the positional fold then only
     # ever sees window docs' rows (its own cost bound — see module doc)
-    pos = spark.read.parquet(store.path("positions")).filter(
+    pos = store.read(spark, "positions").filter(
         F.col("doc_id").isin(ids)
     )
     ph = phrase_match_positions(pos, p_terms, slop, in_order=in_order)

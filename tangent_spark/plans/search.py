@@ -35,6 +35,7 @@ from __future__ import annotations
 import math
 import os
 import re
+import warnings
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -156,16 +157,22 @@ def load_deleted_ids(spark: SparkSession, store: IndexStore) -> np.ndarray:
     (8 B/doc; Lucene holds the same information as an in-memory
     per-segment bitset). Block-max pruning stays EXACT under masking:
     block upper bounds computed over a superset of live postings can
-    only overestimate, so no live doc is ever pruned wrongly."""
-    tdir = store.path("tombstones")
-    if not os.path.isdir(tdir) or not any(
-        f.endswith(".parquet") for f in os.listdir(tdir)
-    ):
-        return np.zeros(0, dtype=np.int64)
-    rows = spark.read.parquet(tdir).select("doc_id").collect()
-    if not rows:
-        return np.zeros(0, dtype=np.int64)
-    return np.unique(np.asarray([r["doc_id"] for r in rows], dtype=np.int64))
+    only overestimate, so no live doc is ever pruned wrongly. Read
+    once per index generation (IndexStore.memo); the array is shared,
+    so it is read-only."""
+
+    def read() -> np.ndarray:
+        tdir = store.path("tombstones")
+        ids = np.zeros(0, dtype=np.int64)
+        if os.path.isdir(tdir) and any(
+            f.endswith(".parquet") for f in os.listdir(tdir)
+        ):
+            rows = store.read(spark, "tombstones").select("doc_id").collect()
+            ids = np.unique(np.asarray([r["doc_id"] for r in rows], dtype=np.int64))
+        ids.flags.writeable = False
+        return ids
+
+    return store.memo(spark, ("deleted_ids",), read)
 
 
 def _deleted_mask(ids: np.ndarray, deleted: np.ndarray) -> np.ndarray | None:
@@ -569,7 +576,6 @@ def _wand_plan(
     after=None,
     doc_weights=None,
     term_boosts=None,
-    corpus_df: DataFrame | None = None,
 ) -> DataFrame:
     """The whole query as ONE declarative plan: filter postings to the
     query terms (parquet row-group pruning / in-memory scan), broadcast-
@@ -578,41 +584,15 @@ def _wand_plan(
     `term_boosts` ({term: weight}, Lucene `term^2.5`) scales the idf
     BEFORE it reaches the kernel, so block-max upper bounds (idf *
     tfn(max_tf, min_dl)) carry the boost and pruning stays exact.
-
-    `corpus_df` (the 1-row corpus_stats table) folds the corpus stats
-    INTO this plan: idf is computed from the crossJoined n_docs and
-    avgdl rides every row (the kernel's per-row avgdl path, same one
-    the fielded index uses), so the caller never collects corpus_stats
-    in a separate driver job — the cold query is ONE Spark job total.
-    `n_docs`/`avgdl` are ignored then (identical values by
-    construction: same ints, same IEEE division)."""
-    if corpus_df is not None:
-        c = corpus_df.select(
-            F.col("n_docs").cast("double").alias("_nd"),
-            F.when(
-                F.col("avgdl").isNull() | (F.col("avgdl") == 0.0), F.lit(1.0)
-            ).otherwise(F.col("avgdl").cast("double")).alias("avgdl"),
-        )
-        qstats = (
-            term_stats.filter(F.col("term").isin(qts))
-            .crossJoin(F.broadcast(c))
-            .select(
-                "term",
-                F.log(
-                    F.lit(1.0)
-                    + (F.col("_nd") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                ).alias("idf"),
-                "avgdl",
-            )
-        )
-    else:
-        qstats = term_stats.filter(F.col("term").isin(qts)).select(
-            "term",
-            F.log(
-                F.lit(1.0)
-                + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ).alias("idf"),
-        )
+    Cold callers take postings, term_stats, n_docs, avgdl and deleted
+    from _cold_sources."""
+    qstats = term_stats.filter(F.col("term").isin(qts)).select(
+        "term",
+        F.log(
+            F.lit(1.0)
+            + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+        ).alias("idf"),
+    )
     if term_boosts:
         bmap = F.create_map(
             *[F.lit(x) for t, w in term_boosts.items() for x in (t, float(w))]
@@ -623,7 +603,6 @@ def _wand_plan(
                 F.col("idf")
                 * F.coalesce(F.element_at(bmap, F.col("term")), F.lit(1.0))
             ).alias("idf"),
-            *(["avgdl"] if corpus_df is not None else []),
         )
     kern = _score_shard(
         avgdl, cfg, k, deleted=deleted, after=after, doc_weights=doc_weights
@@ -646,6 +625,27 @@ def _wand_plan(
     return local.select(*cols).orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
+def _cold_sources(spark: SparkSession, store: IndexStore) -> dict:
+    """The store-side keyword arguments of _wand_plan and _boolean_plan
+    for a cold query: postings and term_stats handles, corpus n_docs
+    and avgdl, and the tombstone ids — all memoized per index
+    generation, so a repeat query re-lists no parquet and runs no
+    stats job."""
+    cs = store.corpus_stats(spark)
+    return dict(
+        postings=store.read(spark, "postings"),
+        term_stats=store.read(spark, "term_stats"),
+        n_docs=int(cs["n_docs"]),
+        avgdl=float(cs["avgdl"]) if cs["avgdl"] else 1.0,
+        deleted=load_deleted_ids(spark, store),
+    )
+
+
+def _cursor(after):
+    """A caller's searchAfter cursor as the kernel's (score, doc_id)."""
+    return (float(after[0]), int(after[1])) if after is not None else None
+
+
 def bm25_topk_wand(
     spark: SparkSession,
     store: IndexStore,
@@ -663,21 +663,9 @@ def bm25_topk_wand(
     qts, boosts = split_term_boosts(query, cfg.tokenizer)
     if not qts:
         return spark.createDataFrame([], "doc_id long, score double")
-    # corpus stats ride the plan (corpus_df) instead of a separate
-    # driver collect — the cold query is ONE Spark job end to end
     return _wand_plan(
-        spark.read.parquet(store.path("postings")),
-        spark.read.parquet(store.path("term_stats")),
-        qts,
-        0,
-        1.0,
-        cfg,
-        k,
-        with_metrics,
-        deleted=load_deleted_ids(spark, store),
-        after=(float(after[0]), int(after[1])) if after is not None else None,
-        term_boosts=boosts,
-        corpus_df=spark.read.parquet(store.path("corpus_stats")),
+        qts=qts, cfg=cfg, k=k, with_metrics=with_metrics, after=_cursor(after),
+        term_boosts=boosts, **_cold_sources(spark, store),
     )
 
 
@@ -728,19 +716,9 @@ def boosted_topk(
     weights = 1.0 / (1.0 + age / float(half_life_days))
     ok = np.isfinite(weights)
     dw = (ids[ok], weights[ok], float(missing))
-    cs = spark.read.parquet(store.path("corpus_stats")).collect()[0]
     return _wand_plan(
-        spark.read.parquet(store.path("postings")),
-        spark.read.parquet(store.path("term_stats")),
-        qts,
-        int(cs["n_docs"]),
-        float(cs["avgdl"]) if cs["avgdl"] else 1.0,
-        cfg,
-        k,
-        False,
-        deleted=load_deleted_ids(spark, store),
-        after=(float(after[0]), int(after[1])) if after is not None else None,
-        doc_weights=dw,
+        qts=qts, cfg=cfg, k=k, with_metrics=False, after=_cursor(after),
+        doc_weights=dw, **_cold_sources(spark, store),
     )
 
 
@@ -811,21 +789,12 @@ def function_boosted_topk(
     w_max = float(max(weights.max() if weights.size else 0.0, float(missing)))
     scale = float(2.0 ** np.ceil(np.log2(w_max))) if w_max > 1.0 else 1.0
     dw = (ids, weights / scale, float(missing) / scale)
-    cs = spark.read.parquet(store.path("corpus_stats")).collect()[0]
     scored = _wand_plan(
-        spark.read.parquet(store.path("postings")),
-        spark.read.parquet(store.path("term_stats")),
-        qts,
-        int(cs["n_docs"]),
-        float(cs["avgdl"]) if cs["avgdl"] else 1.0,
-        cfg,
-        k,
-        False,
-        deleted=load_deleted_ids(spark, store),
+        qts=qts, cfg=cfg, k=k, with_metrics=False,
         after=(float(after[0]) / scale, int(after[1]))
         if after is not None
         else None,
-        doc_weights=dw,
+        doc_weights=dw, **_cold_sources(spark, store),
     )
     # undo the normalization so callers see true BM25 x f(doc); the
     # ordering (score desc, doc_id asc) is unchanged by the constant
@@ -878,13 +847,13 @@ def bm25_topk_synonyms(
     mdf = spark.createDataFrame(
         sorted(assigned.items()), "term string, syn int"
     )
-    cs = spark.read.parquet(store.path("corpus_stats")).collect()[0]
+    cs = store.corpus_stats(spark)
     N = float(cs["n_docs"])
     avgdl = float(cs["avgdl"]) if cs["avgdl"] else 1.0
     # group idf from the group's max df over members PRESENT in the
     # vocabulary — all broadcast-small joins, still one query job
     stats = (
-        spark.read.parquet(store.path("term_stats"))
+        store.read(spark, "term_stats")
         .join(F.broadcast(mdf), "term")
         .select("term", "syn", "df")
     )
@@ -904,10 +873,10 @@ def bm25_topk_synonyms(
         cfg,
         k,
         deleted=load_deleted_ids(spark, store),
-        after=(float(after[0]), int(after[1])) if after is not None else None,
+        after=_cursor(after),
     )
     local = (
-        spark.read.parquet(store.path("postings"))
+        store.read(spark, "postings")
         .filter(F.col("term").isin(sorted(assigned)))
         .join(F.broadcast(qstats), "term")
         .groupBy("shard")
@@ -964,19 +933,9 @@ def elevated_topk(
             ),
         ).select("rank", "doc_id", "score", F.lit(False).alias("elevated")) \
             .filter(F.col("rank") <= k)
-    cs = spark.read.parquet(store.path("corpus_stats")).collect()[0]
     cand = np.array(sorted(live), dtype=np.int64)
     pscores = _boolean_plan(
-        spark,
-        store,
-        query,
-        len(live),
-        postings=spark.read.parquet(store.path("postings")),
-        term_stats=spark.read.parquet(store.path("term_stats")),
-        n_docs=int(cs["n_docs"]),
-        avgdl=float(cs["avgdl"]) if cs["avgdl"] else 1.0,
-        deleted=deleted,
-        ext_cand=cand,
+        spark, store, query, len(live), ext_cand=cand, **_cold_sources(spark, store)
     )
     pin_df = spark.createDataFrame(
         [(i + 1, d) for i, d in enumerate(live)], "rank int, doc_id long"
@@ -1023,7 +982,7 @@ def explain_score(
         return spark.createDataFrame(
             [], "doc_id long, term string, tf int, df int, idf double, contribution double"
         )
-    cs = store.read(spark, "corpus_stats").collect()[0]
+    cs = store.corpus_stats(spark)
     N, avgdl = float(cs["n_docs"]), float(cs["avgdl"]) if cs["avgdl"] else 1.0
     k1, b = cfg.k1, cfg.b
     rows = (
@@ -1069,6 +1028,29 @@ def _idf_from_g_df(n_docs: int):
         return all_rows
 
     return add_idf
+
+
+QUERY_TASK_ROWS_DEFAULT = 100_000
+
+
+def query_task_rows() -> int:
+    """Cached rows per warm query task, from $TANGENT_QUERY_TASK_ROWS.
+    A value that is not a positive integer falls back to the default
+    (with a warning) instead of failing Searcher start-up."""
+    raw = os.environ.get("TANGENT_QUERY_TASK_ROWS")
+    if raw is None:
+        return QUERY_TASK_ROWS_DEFAULT
+    try:
+        rows = int(raw)
+    except ValueError:
+        rows = 0
+    if rows <= 0:
+        warnings.warn(
+            f"TANGENT_QUERY_TASK_ROWS={raw!r} is not a positive integer; "
+            f"using {QUERY_TASK_ROWS_DEFAULT}"
+        )
+        return QUERY_TASK_ROWS_DEFAULT
+    return rows
 
 
 class Searcher:
@@ -1123,14 +1105,14 @@ class Searcher:
         self.spark = spark
         self.store = store
         self.cfg = store.get_config()
-        cs = spark.read.parquet(store.path("corpus_stats")).collect()[0]
+        cs = store.corpus_stats(spark)
         self.n_docs = int(cs["n_docs"])
         self.avgdl = float(cs["avgdl"]) if cs["avgdl"] else 1.0
         # point-in-time tombstone snapshot (Lucene reader semantics):
         # deletes made after warm-up need a new Searcher to be seen
         self.deleted = load_deleted_ids(spark, store)
         self.term_stats = (
-            spark.read.parquet(store.path("term_stats"))
+            store.read(spark, "term_stats")
             .select("term", "df")
             .persist()
         )
@@ -1146,7 +1128,7 @@ class Searcher:
             )
         self.dfs = {r["term"]: int(r["df"]) for r in head}
         pr = (
-            spark.read.parquet(store.path("postings"))
+            store.read(spark, "postings")
             # one-time warm-up join: every cached row carries the CURRENT
             # global df, making every query self-contained (no lexicon
             # lookup on the scoring path, ever)
@@ -1166,7 +1148,7 @@ class Searcher:
             # with no positional equi-join and no shuffle (round-5,
             # VERDICT r4 #4). Null-padded columns cost ~nothing in the
             # columnar cache.
-            po = spark.read.parquet(store.path("positions")).withColumn(
+            po = store.read(spark, "positions").withColumn(
                 "kind", F.lit(1).cast("int")
             )
             serving = pr.unionByName(po, allowMissingColumns=True)
@@ -1212,14 +1194,13 @@ class Searcher:
         # fixed launch + Python-worker round trip per query (~10 ms
         # each in local mode), which dominates when the per-task slice
         # is tiny. Rows-per-task is parameterised (env
-        # TANGENT_QUERY_TASK_ROWS, default 100k); at production sizes
-        # the row count drives this back to one task per shard, so the
-        # cluster-scale plan is unchanged.
-        rows_per_task = int(os.environ.get("TANGENT_QUERY_TASK_ROWS", "100000"))
+        # TANGENT_QUERY_TASK_ROWS, see query_task_rows); at production
+        # sizes the row count drives this back to one task per shard, so
+        # the cluster-scale plan is unchanged.
         self.query_tasks = min(
             self.cfg.n_shards,
             spark.sparkContext.defaultParallelism,
-            max(2, math.ceil(n_serving / max(rows_per_task, 1))),
+            max(2, math.ceil(n_serving / query_task_rows())),
         )
         # batches amortize the per-task launch cost across every query
         # in the batch and their kernel work is CPU-bound (one decode +
@@ -1542,7 +1523,7 @@ class Searcher:
         (bounded by a single document's length). Scoring is one warm
         single-stage job."""
         rows = (
-            self.spark.read.parquet(self.store.path("terms"))
+            self.store.read(self.spark, "terms")
             .filter(F.col("doc_id") == int(doc_id))
             .select("term", "tf")
             .collect()
@@ -1581,9 +1562,7 @@ class Searcher:
         hit = self._filter_cache.get(key)
         if hit is None:
             if self._docs is None:
-                self._docs = self.spark.read.parquet(
-                    self.store.path("docs")
-                ).persist()
+                self._docs = self.store.read(self.spark, "docs").persist()
             hit = _route_filter(self.spark, self._docs, where, max_driver_candidates)
             if len(self._filter_cache) >= 64:
                 self._filter_cache.pop(next(iter(self._filter_cache)))
@@ -1671,7 +1650,7 @@ class Searcher:
 
     def _warm_docs(self) -> DataFrame:
         if self._docs is None:
-            self._docs = self.spark.read.parquet(self.store.path("docs")).persist()
+            self._docs = self.store.read(self.spark, "docs").persist()
         return self._docs
 
     def _facet_spine(
@@ -1930,7 +1909,7 @@ class Searcher:
             raise ValueError(
                 "index was built without positions (IndexConfig.store_positions)"
             )
-        return self.spark.read.parquet(self.store.path("positions"))
+        return self.store.read(self.spark, "positions")
 
     def rescore(
         self,
@@ -2087,7 +2066,7 @@ def bm25_topk_index_full(
     qts = query_terms(query, cfg.tokenizer)
     if not qts:
         return spark.createDataFrame([], "doc_id long, score double")
-    cs = spark.read.parquet(store.path("corpus_stats")).collect()[0]
+    cs = store.corpus_stats(spark)
     N, avgdl = int(cs["n_docs"]), float(cs["avgdl"]) if cs["avgdl"] else 1.0
     k1, b = cfg.k1, cfg.b
 
@@ -2117,7 +2096,7 @@ def bm25_topk_index_full(
                 )
 
     qstats = (
-        spark.read.parquet(store.path("term_stats"))
+        store.read(spark, "term_stats")
         .filter(F.col("term").isin(qts))
         .select(
             "term",
@@ -2127,7 +2106,7 @@ def bm25_topk_index_full(
         )
     )
     postings = (
-        spark.read.parquet(store.path("postings"))
+        store.read(spark, "postings")
         .filter(F.col("term").isin(qts))
         .join(F.broadcast(qstats), "term")
     )

@@ -114,7 +114,7 @@ def significant_terms(
         .groupBy("term")
         .agg(F.count("*").alias("fg_df"))  # terms_df is one row per (doc, term)
     )
-    cs = store.read(spark, "corpus_stats").collect()[0]
+    cs = store.corpus_stats(spark)
     return significant_terms_from_counts(
         fg_terms,
         fg_total,

@@ -128,7 +128,7 @@ def mlt_query_terms(
     deterministic downstream plans."""
     from tangent_spark.plans.search import idf
 
-    cs = store.read(spark, "corpus_stats").collect()[0]
+    cs = store.corpus_stats(spark)
     N = int(cs["n_docs"])
     rows = (
         store.read(spark, "terms")
@@ -155,30 +155,20 @@ def more_like_this(
     the source doc's top tf*idf terms, source doc excluded. Served by
     the standard block-max WAND kernel — an MLT query costs exactly one
     user query plus the bounded term-selection read."""
-    from tangent_spark.plans.search import _wand_plan, load_deleted_ids
+    from tangent_spark.plans.search import _cold_sources, _wand_plan
 
     import numpy as np
 
     qts = mlt_query_terms(spark, store, doc_id, max_terms)
     if not qts:
         return spark.createDataFrame([], "doc_id long, score double")
-    cfg = store.get_config()
-    cs = store.read(spark, "corpus_stats").collect()[0]
-    deleted = load_deleted_ids(spark, store)
+    src = _cold_sources(spark, store)
     # the source doc must never be its own suggestion: mask it exactly
     # like a tombstone (k+1 then re-limit would also work, but this
     # keeps the kernel's top-k tight)
-    deleted = np.unique(np.append(deleted, np.int64(doc_id)))
+    src["deleted"] = np.unique(np.append(src["deleted"], np.int64(doc_id)))
     return _wand_plan(
-        store.read(spark, "postings"),
-        store.read(spark, "term_stats"),
-        qts,
-        int(cs["n_docs"]),
-        float(cs["avgdl"]) if cs["avgdl"] else 1.0,
-        cfg,
-        k,
-        False,
-        deleted=deleted,
+        qts=qts, cfg=store.get_config(), k=k, with_metrics=False, **src
     )
 
 
@@ -237,24 +227,12 @@ def spellcheck_collate(
     # corrections come FROM the vocabulary, so the collation is
     # servable iff any token is in-vocab or was corrected
     if n_corr > 0 or any(t in vocab for t in out):
-        cs = store.read(spark, "corpus_stats").collect()[0]
-        from tangent_spark.plans.search import load_deleted_ids
+        from tangent_spark.plans.search import _cold_sources
 
-        hits = (
-            _boolean_plan(
-                spark,
-                store,
-                collation,
-                0,
-                postings=store.read(spark, "postings"),
-                term_stats=ts,
-                n_docs=int(cs["n_docs"]),
-                avgdl=float(cs["avgdl"]) if cs["avgdl"] else 1.0,
-                deleted=load_deleted_ids(spark, store),
-                return_matches=True,
-            )
-            .count()
-        )
+        hits = _boolean_plan(
+            spark, store, collation, 0, return_matches=True,
+            **_cold_sources(spark, store),
+        ).count()
     return spark.createDataFrame(
         [(collation, int(hits), int(n_corr))],
         "collation string, hits long, n_corrected int",

@@ -68,7 +68,7 @@ def term_vectors(
                 "index was built without positions (IndexConfig.store_positions)"
             )
         pos = (
-            spark.read.parquet(store.path("positions"))
+            store.read(spark, "positions")
             .filter(F.col("doc_id").isin(ids) & F.col("term").isin(terms))
             .select("doc_id", "term", "positions")
         )

@@ -107,10 +107,9 @@ def load_rev_terms(spark: SparkSession, store: IndexStore) -> DataFrame | None:
     """The store's reversed term dictionary, or None for stores built
     before it existed (expansion then falls back to the forward scan —
     same answer, more IO)."""
-    p = store.path(REV_TABLE)
-    if not os.path.exists(os.path.join(p, "_SUCCESS")):
+    if not os.path.exists(os.path.join(store.path(REV_TABLE), "_SUCCESS")):
         return None
-    return spark.read.parquet(p)
+    return store.read(spark, REV_TABLE)
 
 
 def write_rev_terms(spark: SparkSession, stats_path: str, rev_path: str) -> None:
@@ -246,25 +245,17 @@ def regexp_topk(
     """Cold regexp BM25 top-k: expand, then the standard ONE-job
     block-max WAND plan (deleted docs masked, searchAfter paging
     supported)."""
-    from tangent_spark.plans.search import _wand_plan, load_deleted_ids
+    from tangent_spark.plans.search import _cold_sources, _cursor, _wand_plan
 
     cfg = store.get_config()
-    ts = spark.read.parquet(store.path("term_stats"))
-    qts = regexp_terms(ts, query, cfg.tokenizer, max_expansions)
+    qts = regexp_terms(
+        store.read(spark, "term_stats"), query, cfg.tokenizer, max_expansions
+    )
     if not qts:
         return spark.createDataFrame([], "doc_id long, score double")
-    cs = spark.read.parquet(store.path("corpus_stats")).collect()[0]
     return _wand_plan(
-        spark.read.parquet(store.path("postings")),
-        ts,
-        qts,
-        int(cs["n_docs"]),
-        float(cs["avgdl"]) if cs["avgdl"] else 1.0,
-        cfg,
-        k,
-        with_metrics,
-        deleted=load_deleted_ids(spark, store),
-        after=(float(after[0]), int(after[1])) if after is not None else None,
+        qts=qts, cfg=cfg, k=k, with_metrics=with_metrics, after=_cursor(after),
+        **_cold_sources(spark, store),
     )
 
 
@@ -391,12 +382,11 @@ def wildcard_topk(
     then the standard ONE-job block-max WAND plan (deleted docs masked,
     searchAfter paging supported — the expanded query is an ordinary
     disjunction from the kernel's point of view)."""
-    from tangent_spark.plans.search import _wand_plan, load_deleted_ids
+    from tangent_spark.plans.search import _cold_sources, _cursor, _wand_plan
 
     cfg = store.get_config()
-    ts = spark.read.parquet(store.path("term_stats"))
     qts = wildcard_terms(
-        ts,
+        store.read(spark, "term_stats"),
         query,
         cfg.tokenizer,
         max_expansions,
@@ -404,16 +394,7 @@ def wildcard_topk(
     )
     if not qts:
         return spark.createDataFrame([], "doc_id long, score double")
-    cs = spark.read.parquet(store.path("corpus_stats")).collect()[0]
     return _wand_plan(
-        spark.read.parquet(store.path("postings")),
-        ts,
-        qts,
-        int(cs["n_docs"]),
-        float(cs["avgdl"]) if cs["avgdl"] else 1.0,
-        cfg,
-        k,
-        with_metrics,
-        deleted=load_deleted_ids(spark, store),
-        after=(float(after[0]), int(after[1])) if after is not None else None,
+        qts=qts, cfg=cfg, k=k, with_metrics=with_metrics, after=_cursor(after),
+        **_cold_sources(spark, store),
     )

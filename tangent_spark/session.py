@@ -16,6 +16,23 @@ from pyspark.sql import SparkSession
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap when $SPARK_GRAFT_DRIVER_MEM is unset: 48g, capped at
+    40% of the host's MemTotal. In local mode the driver JVM also runs
+    every task, next to the Python workers, so a heap sized past
+    physical memory gets the process OOM-killed instead of collected."""
+    cap_mb = 48 * 1024
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    cap_mb = min(cap_mb, int(line.split()[1]) * 2 // 5 // 1024)
+                    break
+    except (OSError, ValueError, IndexError):
+        pass  # no /proc/meminfo (non-Linux host): keep the 48g default
+    return f"{max(cap_mb, 1024)}m"
+
+
 def get_spark(
     app: str = "tangent_spark",
     cpus: int | None = None,
@@ -69,7 +86,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
     )

@@ -25,6 +25,19 @@ Layout under <root>/:
     tombstones/   (parquet)        -- stages 'delete_<id>': doc_id marks
                                       (masked at serve; physically removed
                                       + reset by the next compaction)
+
+Index generations: every manifest write (stage commit, table-version
+flip, config set) bumps the manifest's `generation` counter. Readers
+memoize per (SparkSession, generation): `IndexStore.read` returns the
+same DataFrame handle, and `corpus_stats` / the tombstone id set are
+collected once, until the next commit. A query therefore pays the
+parquet listing, schema inference and stats collect once per index
+generation, not once per call. Every mutation (build stages,
+append_batch, delete_docs, compact_postings, merge) ends in a manifest
+write, so the next read after it sees the new state. Writers read the
+tables of an uncommitted stage with `spark.read.parquet` directly:
+those files change before the manifest does, so a memoized handle
+would be stale there.
 """
 
 from __future__ import annotations
@@ -45,6 +58,8 @@ class IndexStore:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
+        # key -> (SparkSession, generation, value); see memo()
+        self._memo: dict[Any, tuple[Any, int, Any]] = {}
 
     # -- paths --------------------------------------------------------------
     # Tables are versioned: version 0 lives at <root>/<table> (the batch
@@ -64,8 +79,35 @@ class IndexStore:
         return self.versioned_path(table, self.table_version(table))
 
     def read(self, spark, table: str):
-        """DataFrame over the CURRENT version of a table (snapshot read)."""
-        return spark.read.parquet(self.path(table))
+        """DataFrame over the CURRENT version of a table (snapshot read).
+
+        The handle is memoized per (session, index generation): repeat
+        calls return the identical DataFrame until the next manifest
+        write, and a handle built under one SparkSession is never
+        returned to another. Writers reading a table of a stage they
+        have not committed yet must use spark.read.parquet instead."""
+        return self.memo(spark, ("read", table),
+                         lambda: spark.read.parquet(self.path(table)))
+
+    def corpus_stats(self, spark):
+        """The 1-row corpus_stats table (n_docs, total_tokens, avgdl) as
+        a Row, collected once per (session, index generation)."""
+        return self.memo(spark, ("corpus_stats",),
+                         lambda: self.read(spark, "corpus_stats").collect()[0])
+
+    def memo(self, spark, key, build):
+        """build() once per (spark, key, index generation); later calls
+        with the same session and no manifest write in between return
+        the cached value. Callers must treat the value as read-only.
+        Two threads missing at once both build; either value is valid
+        for the generation, so the last write simply wins."""
+        generation = self.read_manifest().get("generation", 0)
+        hit = self._memo.get(key)
+        if hit is not None and hit[0] is spark and hit[1] == generation:
+            return hit[2]
+        value = build()
+        self._memo[key] = (spark, generation, value)
+        return value
 
     @property
     def manifest_path(self) -> str:
@@ -79,6 +121,10 @@ class IndexStore:
             return json.load(f)
 
     def _write_manifest(self, m: dict[str, Any]) -> None:
+        # invalidates memo(); a new manifest starts from the clock, so an
+        # index rebuilt in the same directory never repeats a generation
+        # that an older IndexStore object may still hold
+        m["generation"] = m.get("generation", time.time_ns()) + 1
         tmp = self.manifest_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(m, f, indent=2, sort_keys=True)

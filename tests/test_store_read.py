@@ -1,0 +1,215 @@
+"""IndexStore read memoization: table handles, corpus stats and the
+tombstone id set are built once per (SparkSession, index generation).
+
+Every manifest write bumps the generation, so the next cold query after
+append_batch, delete_docs or compact_postings must serve the new state
+through the same IndexStore object; a handle cached under one session
+is never handed to another.
+"""
+
+import fnmatch
+import math
+
+import pytest
+from pyspark.sql import functions as F
+
+from tangent_spark.config import IndexConfig
+from tangent_spark.corpus import generate_pages, pages_with_doc_ids
+from tangent_spark.functions.tokenize import tokenize_porter
+from tangent_spark.oracle import bm25_rank
+from tangent_spark.plans.indexer import build_index
+from tangent_spark.plans.search import (
+    QUERY_TASK_ROWS_DEFAULT,
+    bm25_topk_wand,
+    load_deleted_ids,
+    query_task_rows,
+)
+from tangent_spark.plans.wildcard import parse_wildcard_query, wildcard_topk
+from tangent_spark.session import default_driver_memory
+from tangent_spark.streaming.incremental import (
+    append_batch,
+    compact_postings,
+    delete_docs,
+)
+
+CFG = IndexConfig(n_shards=4, block_size=16)
+N_FIRST = 80
+N_ALL = 120
+K = 10
+BM25_Q = "matrix convergence theorem"
+WILD_Q = "con* value"
+
+
+@pytest.fixture(scope="module")
+def pages(spark):
+    return pages_with_doc_ids(generate_pages(spark, N_ALL, partitions=4)).persist()
+
+
+@pytest.fixture(scope="module")
+def texts_by_url(pages):
+    return {r["url"]: r["text"] for r in pages.select("url", "text").collect()}
+
+
+def _build(spark, pages, path):
+    return build_index(
+        spark, pages.filter(F.col("doc_id") < N_FIRST), path, CFG, url_col="url"
+    )
+
+
+def _rows(df):
+    return [(int(r["doc_id"]), float(r["score"])) for r in df.collect()]
+
+
+def _indexed_docs(spark, store, texts_by_url):
+    """(doc_id, text) of every doc in the docs dictionary (tombstoned
+    docs included until compaction)."""
+    return sorted(
+        (int(r["doc_id"]), texts_by_url[r["url"]])
+        for r in store.read(spark, "docs").select("doc_id", "url").collect()
+    )
+
+
+def _wildcard_terms(docs, query):
+    vocab = {t for _, text in docs for t in tokenize_porter(text)}
+    pats, lits = parse_wildcard_query(query, "porter")
+    terms = set(lits)
+    for p in pats:
+        terms.update(t for t in vocab if fnmatch.fnmatchcase(t, p))
+    return sorted(terms)
+
+
+def _oracle(docs, query, deleted=()):
+    """BM25 top-K over `docs` with `deleted` masked afterwards: stats
+    stay at their index-time values until compaction (Lucene)."""
+    terms = _wildcard_terms(docs, query) if "*" in query else query
+    ranked = bm25_rank(docs, terms, K + len(deleted), CFG.k1, CFG.b, "porter")
+    return [(d, s) for d, s in ranked if d not in set(deleted)][:K]
+
+
+def _assert_same(got, want):
+    assert [d for d, _ in got] == [d for d, _ in want]
+    for (_, gs), (_, ws) in zip(got, want):
+        assert math.isclose(gs, ws, rel_tol=1e-9)
+
+
+def _check_cold_queries(spark, store, docs, deleted=()):
+    for query, fn in ((BM25_Q, bm25_topk_wand), (WILD_Q, wildcard_topk)):
+        got = _rows(fn(spark, store, query, K))
+        _assert_same(got, _oracle(docs, query, deleted))
+    return _rows(bm25_topk_wand(spark, store, BM25_Q, K))
+
+
+def test_read_returns_identical_handle_until_commit(spark, pages, tmp_path):
+    store = _build(spark, pages, str(tmp_path / "idx"))
+    postings = store.read(spark, "postings")
+    stats = store.corpus_stats(spark)
+    deleted = load_deleted_ids(spark, store)
+    assert store.read(spark, "postings") is postings
+    assert store.corpus_stats(spark) is stats
+    assert load_deleted_ids(spark, store) is deleted
+    assert not deleted.flags.writeable  # shared across queries
+    store.commit_stage("noop", [], {})
+    assert store.read(spark, "postings") is not postings
+    assert store.corpus_stats(spark) is not stats
+    assert store.corpus_stats(spark) == stats
+
+
+def test_handle_not_shared_across_sessions(spark, pages, tmp_path):
+    store = _build(spark, pages, str(tmp_path / "idx"))
+    other = spark.newSession()
+    mine = store.read(spark, "term_stats")
+    theirs = store.read(other, "term_stats")
+    assert theirs is not mine
+    assert theirs.sparkSession is other
+    assert store.read(other, "term_stats") is theirs
+    # each session's entry replaces the other's: never handed across
+    assert store.read(spark, "term_stats").sparkSession is spark
+    assert store.corpus_stats(other) == store.corpus_stats(spark)
+
+
+def test_cold_queries_follow_every_commit(spark, pages, texts_by_url, tmp_path):
+    store = _build(spark, pages, str(tmp_path / "idx"))
+    docs = _indexed_docs(spark, store, texts_by_url)
+    _check_cold_queries(spark, store, docs)  # memoizes every handle
+
+    append_batch(
+        spark, store, pages.filter(F.col("doc_id") >= N_FIRST).drop("doc_id"), 1
+    )
+    docs = _indexed_docs(spark, store, texts_by_url)
+    assert len(docs) == N_ALL
+    ranked = _check_cold_queries(spark, store, docs)
+    appended = {d for d, _ in docs} - set(range(N_FIRST))
+    assert appended & {d for d, _ in ranked}, "appended docs must rank"
+
+    victims = [d for d, _ in ranked[:3]]
+    delete_docs(spark, store, victims, 1)
+    ranked = _check_cold_queries(spark, store, docs, deleted=victims)
+    assert not set(victims) & {d for d, _ in ranked}
+
+    old_postings = store.path("postings")
+    compact_postings(spark, store)
+    assert store.path("postings") != old_postings
+    served = store.read(spark, "postings").inputFiles()
+    assert served and all(f.find(store.path("postings") + "/") >= 0 for f in served)
+    docs = [(d, t) for d, t in docs if d not in set(victims)]
+    assert _indexed_docs(spark, store, texts_by_url) == docs
+    assert load_deleted_ids(spark, store).size == 0
+    _check_cold_queries(spark, store, docs)
+
+
+def test_warm_cold_bm25_job_count(spark, pages, tmp_path):
+    """With handles, corpus stats and tombstones memoized, a repeat cold
+    BM25 query runs only its own plan's jobs: the broadcast of the
+    query-term idf rows, the shard shuffle map stage and the result
+    stage."""
+    store = _build(spark, pages, str(tmp_path / "idx"))
+    want = _rows(bm25_topk_wand(spark, store, BM25_Q, K))
+    sc = spark.sparkContext
+    group = "test-cold-bm25-jobs"
+    sc.setJobGroup(group, "second cold bm25_topk_wand")
+    try:
+        got = _rows(bm25_topk_wand(spark, store, BM25_Q, K))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == want
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+
+
+@pytest.mark.parametrize(
+    "raw, want",
+    [
+        (None, QUERY_TASK_ROWS_DEFAULT),
+        ("5000", 5000),
+        ("abc", QUERY_TASK_ROWS_DEFAULT),
+        ("", QUERY_TASK_ROWS_DEFAULT),
+        ("0", QUERY_TASK_ROWS_DEFAULT),
+        ("-7", QUERY_TASK_ROWS_DEFAULT),
+        ("1.5", QUERY_TASK_ROWS_DEFAULT),
+    ],
+)
+def test_query_task_rows_validated(monkeypatch, raw, want):
+    if raw is None:
+        monkeypatch.delenv("TANGENT_QUERY_TASK_ROWS", raising=False)
+    else:
+        monkeypatch.setenv("TANGENT_QUERY_TASK_ROWS", raw)
+    if want == QUERY_TASK_ROWS_DEFAULT and raw is not None:
+        with pytest.warns(UserWarning, match="TANGENT_QUERY_TASK_ROWS"):
+            assert query_task_rows() == want
+    else:
+        assert query_task_rows() == want
+
+
+@pytest.mark.parametrize(
+    "meminfo, want",
+    [
+        ("MemTotal:       16000000 kB\nMemFree: 1 kB\n", f"{16000000 * 2 // 5 // 1024}m"),
+        ("MemTotal:       512000000 kB\n", f"{48 * 1024}m"),
+        ("MemTotal:       1000000 kB\n", "1024m"),
+        (None, f"{48 * 1024}m"),
+    ],
+)
+def test_default_driver_memory_fits_host(tmp_path, meminfo, want):
+    path = tmp_path / "meminfo"
+    if meminfo is not None:
+        path.write_text(meminfo)
+    assert default_driver_memory(str(path)) == want
