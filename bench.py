@@ -297,6 +297,7 @@ def main() -> None:
         "batch_blocks_per_rep": batch_blocks,
         "single_blocks_decoded_equiv": 6 * single_acc.value,
         "cpus": cpus,
+        "n_shards": cfg.n_shards,
     }
     shutil.rmtree(os.path.dirname(idx_dir), ignore_errors=True)
     print(json.dumps(out))

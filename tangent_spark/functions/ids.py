@@ -22,10 +22,14 @@ def dense_ids(df: DataFrame, key: str, id_col: str, partitions: int | None = Non
     `key` values must be unique (dedupe first)."""
     spark = df.sparkSession
     p = partitions or spark.sparkContext.defaultParallelism
+    # count job and id job must see the same boundaries, so the ranged
+    # rows are stored once. An eager local checkpoint, not persist(): the
+    # returned frame is lazy, so no one could unpersist a cache entry,
+    # while the ContextCleaner frees the checkpoint once it is unreachable.
     ranged = (
         df.repartitionByRange(p, key)
         .withColumn("_pid", F.spark_partition_id())
-        .persist()  # count job and id job must see the same boundaries
+        .localCheckpoint(eager=True)
     )
     counts = {
         r["_pid"]: r["n"]

@@ -15,6 +15,17 @@ Scale notes: every stage is a plain DataFrame shuffle keyed on a hash
 (uniform by construction). Candidate generation never does a cross
 join — pairs only form inside an LSH bucket / simhash band, the same
 inverted-index-join pattern the text engine uses for postings.
+
+Materialize what you read twice: a frame that a function reads more
+than once is materialized once with an eager localCheckpoint(). Spark
+does not reuse a subtree that sits under exchanges on different keys,
+so a lazy input read by both sides of a join re-runs its whole
+lineage, Python kernels included, once per read. Not persist(): these
+functions return lazy frames, no caller holds a handle to unpersist,
+and a CacheManager entry lives until it is unpersisted, while the
+ContextCleaner frees a checkpointed RDD once it is unreachable. Not a
+lazy checkpoint either: materializing one inside a larger job can log
+"non-existent accumulator" warnings.
 """
 
 from __future__ import annotations
@@ -46,6 +57,13 @@ def _shingles(text: str, k: int) -> List[str]:
     if len(toks) < k:
         return [" ".join(toks)] if toks else []
     return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Free the blocks of a localCheckpoint() frame now. DataFrame.unpersist
+    only drops CacheManager entries, so on a checkpoint it is a no-op;
+    the stored rows belong to the RDD under the frame's LogicalRDD leaf."""
+    checkpointed._jdf.logicalPlan().rdd().unpersist(False)
 
 
 def _base_hash64(values: List[str]) -> np.ndarray:
@@ -124,8 +142,13 @@ def lsh_candidate_pairs(
     max_bucket_size docs — a bucket of size m emits m(m-1)/2 pairs, so one
     hot bucket would otherwise go quadratic; dropped buckets are those
     where MinHash has collapsed (near-identical boilerplate), which the
-    surviving bands still pair up unless all 16 collapse together."""
+    surviving bands still pair up unless all 16 collapse together.
+
+    Runs one Spark job when called: `signatures` is read three times
+    (bucket explosion and both join-backs), so it is materialized first
+    and the min-hash kernel runs once."""
     n = bands * rows_per_band
+    signatures = signatures.select("doc_id", "sig").localCheckpoint(eager=True)
     buckets = signatures.select(
         "doc_id",
         F.explode(
@@ -160,10 +183,9 @@ def lsh_candidate_pairs(
         .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    sigs = signatures.select("doc_id", "sig")
     pairs = (
-        pairs.join(sigs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sig", "sig_a"), "doc_a")
-        .join(sigs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sig", "sig_b"), "doc_b")
+        pairs.join(signatures.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sig", "sig_a"), "doc_a")
+        .join(signatures.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sig", "sig_b"), "doc_b")
     )
     est = F.size(
         F.filter(F.zip_with("sig_a", "sig_b", lambda p, q: p == q), lambda v: v)
@@ -193,7 +215,12 @@ def jaccard_verify(
     (biased toward the distinctive content, which is what near-dup
     detection wants) with per-shingle join fan-out bounded by
     max_shingle_df^2. At 100-TB scale you want the cap ON; it is opt-in
-    so exact-threshold callers never silently change semantics."""
+    so exact-threshold callers never silently change semantics.
+
+    Runs Spark jobs when called: `candidates` (read three times) and the
+    shingle rows (read by the set sizes and both sides of the shingle
+    join) are each materialized once, so the shingle kernel runs once."""
+    candidates = candidates.select("doc_a", "doc_b").localCheckpoint(eager=True)
     docs_in_pairs = (
         candidates.select(F.col("doc_a").alias("doc_id"))
         .union(candidates.select(F.col("doc_b").alias("doc_id")))
@@ -210,18 +237,22 @@ def jaccard_verify(
                     shs.append(sh)
             yield pd.DataFrame({"doc_id": ids, "shingle": shs})
 
-    g = relevant.select(id_col, text_col).mapInPandas(
-        shingle_rows, schema="doc_id long, shingle string"
+    g = (
+        relevant.select(id_col, text_col)
+        .mapInPandas(shingle_rows, schema="doc_id long, shingle string")
+        .localCheckpoint(eager=True)
     )
     if max_shingle_df is not None:
-        g = g.join(
+        capped = g.join(
             g.groupBy("shingle")
             .agg(F.count("*").alias("_df"))
             .filter(F.col("_df") <= max_shingle_df)
             .drop("_df"),
             "shingle",
             "left_semi",
-        )
+        ).localCheckpoint(eager=True)
+        _release(g)
+        g = capped
     sizes = g.groupBy("doc_id").agg(F.count("*").alias("n"))
     inter = (
         g.alias("p")
@@ -382,8 +413,13 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 30) -> tuple[Dat
     ONE job: the per-round localCheckpoint is lazy, so the convergence
     count() both materializes the checkpoint and reads the row count,
     instead of paying a separate eager-checkpoint job. Superseded
-    checkpoints are unpersisted as rounds advance so executor storage
-    stays bounded on billion-edge graphs.
+    checkpoints are released as rounds advance so executor storage
+    stays bounded on billion-edge graphs; on return only the converged
+    edge set, which the labels read, is still stored.
+
+    Raises RuntimeError, after releasing every checkpoint it made, when
+    the edge set has not converged within max_iter rounds: unconverged
+    stars would label one component with several ids.
 
     Returns labels (doc_id, component) covering every node that appears
     in `pairs`, component = min doc_id of the node's component."""
@@ -396,30 +432,43 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 30) -> tuple[Dat
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n_e = e.count()
     rounds = 0
     prev: DataFrame | None = None
-    for _ in range(max_iter):
-        rounds += 1
-        nxt = _small_star(_large_star(e), oriented=True).localCheckpoint(eager=False)
-        # converged iff the edge sets are identical (both canonical
-        # big->small and deduped, so count + one-sided anti-join
-        # suffice); the previous round's count is carried over, so each
-        # round pays ONE count job, not two
-        n_nxt = nxt.count()
-        if (
-            n_nxt == n_e
-            and nxt.join(e, ["u", "v"], "left_anti").limit(1).count() == 0
-        ):
+    nxt: DataFrame | None = None
+    converged = False
+    try:
+        n_e = e.count()
+        while rounds < max_iter:
+            rounds += 1
+            nxt = _small_star(_large_star(e), oriented=True).localCheckpoint(eager=False)
+            # converged iff the edge sets are identical (both canonical
+            # big->small and deduped, so count + one-sided anti-join
+            # suffice); the previous round's count is carried over, so
+            # each round pays ONE count job, not two
+            n_nxt = nxt.count()
+            converged = (
+                n_nxt == n_e
+                and nxt.join(e, ["u", "v"], "left_anti").limit(1).count() == 0
+            )
             if prev is not None:
-                prev.unpersist()
-            prev, e = e, nxt
-            break
+                # two generations back: no longer referenced by any live
+                # plan (nxt is materialized, the convergence join read e)
+                _release(prev)
+            prev, e, n_e = e, nxt, n_nxt
+            if converged:
+                break
+    finally:
         if prev is not None:
-            # two generations back: no longer referenced by any live
-            # plan (nxt is materialized, the convergence join reads e)
-            prev.unpersist()
-        prev, e, n_e = e, nxt, n_nxt
+            _release(prev)
+        if not converged:
+            _release(e)
+            if nxt is not None:
+                _release(nxt)
+    if not converged:
+        raise RuntimeError(
+            f"connected_components_star: edge set not converged after "
+            f"max_iter={max_iter} rounds"
+        )
     # converged stars: every non-root points straight at its root, and
     # each non-root u appears exactly once as a left endpoint. Labels
     # come out of ONE groupBy-min over (edge rows + (v, v) self rows):
@@ -436,63 +485,11 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 30) -> tuple[Dat
     return labels, rounds
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
-    """(doc_id, component) via iterative min-label propagation over the
-    dup-pair graph. Near-dup clusters are tiny and star-shaped in
-    practice, so a handful of iterations converges; max_iter bounds the
-    job count (each iteration is one shuffle). For general graphs (long
-    chains, web-scale dedup) use connected_components_star, which
-    converges in O(log^2 n) rounds regardless of diameter."""
-    edges = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .union(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
-        .distinct()
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("a").alias("doc_id"))
-        .distinct()
-        .withColumn("component", F.col("doc_id"))
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.b == labels.doc_id)
-            .groupBy("a")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.a, "left")
-            .select(
-                "doc_id",
-                F.least(F.col("component"), F.coalesce("nbr_min", F.col("component"))).alias("component"),
-            )
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels.persist()
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels
-
-
-def dedup_keep_list(
-    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id", method: str = "star"
-) -> DataFrame:
+def dedup_keep_list(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, keep): keep = True unless the doc is in a dup cluster
-    and is not the cluster's minimum id. method='star' (default) uses
-    the O(log^2 n)-round large-star/small-star CC — the right choice at
-    web scale; 'minlabel' keeps the simple propagation (identical keep
-    lists, tested)."""
-    if method == "star":
-        comps, _ = connected_components_star(pairs)
-    else:
-        comps = connected_components(pairs)
+    and is not the cluster's minimum id. Clusters come from the
+    O(log^2 n)-round large-star/small-star connected_components_star."""
+    comps, _ = connected_components_star(pairs)
     losers = comps.filter(F.col("doc_id") != F.col("component")).select("doc_id")
     return df.select(F.col(id_col).alias("doc_id")).join(
         losers.withColumn("keep", F.lit(False)), "doc_id", "left"

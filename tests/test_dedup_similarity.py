@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from tangent_spark.corpus import make_page
 from tangent_spark.operators.dedup import (
-    connected_components,
+    connected_components_star,
     dedup_keep_list,
     exact_dup_groups,
     jaccard_verify,
@@ -119,16 +119,65 @@ def test_connected_components_and_keep(spark, planted_docs):
     pairs = spark.createDataFrame(
         [(0, 100), (1, 101), (101, 102)], "doc_a long, doc_b long"
     )
-    comps = {r["doc_id"]: r["component"] for r in connected_components(pairs).collect()}
+    labels, _ = connected_components_star(pairs)
+    comps = {r["doc_id"]: r["component"] for r in labels.collect()}
     assert comps[100] == 0 and comps[1] == 1 and comps[101] == 1 and comps[102] == 1
     keep = {r["doc_id"]: r["keep"] for r in dedup_keep_list(planted_docs, pairs).collect()}
     assert keep[0] is True and keep[100] is False and keep[101] is False
-    # both CC methods produce identical keep lists
-    keep_ml = {
-        r["doc_id"]: r["keep"]
-        for r in dedup_keep_list(planted_docs, pairs, method="minlabel").collect()
+    assert keep[1] is True and all(keep[i] for i in range(2, 40))
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_dedup_kernels_run_once_inside_checkpoints(spark, planted_docs):
+    """Each Python kernel runs once, inside the eager checkpoint of the
+    frame its function reads more than once: the executed plans the
+    functions return read stored rows and hold no MapInPandas node."""
+    cand = lsh_candidate_pairs(minhash_signatures(planted_docs))
+    verified = jaccard_verify(planted_docs, cand)
+    for df in (cand, verified):
+        df.collect()
+        assert "MapInPandas" not in _executed_plan(df)
+    assert "MapInPandas" in _executed_plan(minhash_signatures(planted_docs))
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _checkpoint_rdd_ids(df) -> set:
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
     }
-    assert keep == keep_ml
+
+
+def test_star_cc_releases_superseded_rounds(spark):
+    """A converged call leaves no round checkpoint stored except the
+    converged edge set that the returned labels read."""
+    edges = [(i, i + 1) for i in range(200)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    before = _persistent_rdd_ids(spark)
+    labels, rounds = connected_components_star(pairs)
+    assert rounds > 2
+    held = _persistent_rdd_ids(spark) - before
+    assert held <= _checkpoint_rdd_ids(labels)
+    assert {r["component"] for r in labels.collect()} == {0}
+
+
+def test_star_cc_unconverged_raises_and_releases(spark):
+    """Running out of max_iter on a long chain raises instead of
+    returning unconverged labels, and frees every round checkpoint."""
+    edges = [(i, i + 1) for i in range(200)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="not converged after max_iter=2"):
+        connected_components_star(pairs, max_iter=2)
+    assert _persistent_rdd_ids(spark) <= before
 
 
 def _uf_oracle(edges):
@@ -162,8 +211,6 @@ def test_star_cc_matches_union_find_oracle(spark):
         if a != b
     ]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    from tangent_spark.operators.dedup import connected_components_star
-
     labels, rounds = connected_components_star(pairs)
     got = {r["doc_id"]: r["component"] for r in labels.collect()}
     want = _uf_oracle(edges)

@@ -54,6 +54,20 @@ def test_incremental_equals_batch(spark, all_pages, tmp_path_factory):
     assert c3["new_docs"] == 0
 
 
+def test_append_leaves_no_cache_entries(spark, all_pages, tmp_path_factory):
+    """append_batch numbers fresh docs with dense_ids once per batch;
+    neither call may leave a CacheManager entry behind."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    base = str(tmp_path_factory.mktemp("nocache"))
+    store = build_index(spark, all_pages.filter(F.col("doc_id") < 50), f"{base}/idx", CFG,
+                        url_col="url")
+    before = cache.numCachedEntries()
+    for bid, (lo, hi) in enumerate([(50, 70), (70, 90)], start=1):
+        batch = all_pages.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+        assert append_batch(spark, store, batch.drop("doc_id"), batch_id=bid)["new_docs"] == 20
+    assert cache.numCachedEntries() == before
+
+
 def test_streaming_driver(spark, all_pages, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("stream"))
     first = all_pages.filter(F.col("doc_id") < 50)
