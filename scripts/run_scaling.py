@@ -91,18 +91,34 @@ def main() -> None:
         ).write.mode("overwrite").parquet(pages_path)
         spark.stop()
 
-    ceiling = cpu_ceiling(LEVELS)
+    # SCALING_PIN=1 pins each run to exactly N CPUs: the first N of this
+    # process's affinity mask. Unpinned, a local[2] JVM on an idle
+    # 32-core box borrows spare cores for GC / parquet compression / IO
+    # threads — free help a real 2-core executor would never get — which
+    # inflates the low-parallelism baseline and understates scaling
+    # efficiency. A level wider than the mask cannot be pinned, and
+    # taskset would silently run it on fewer CPUs, so it is skipped.
+    pin = os.environ.get("SCALING_PIN", "") == "1"
+    usable = sorted(os.sched_getaffinity(0)) if pin else []
+
+    def fits(cpus: int) -> bool:
+        return not pin or cpus <= len(usable)
 
     run_levels = tuple(
         int(x) for x in os.environ.get("SCALING_RUN_LEVELS", "").split(",") if x
     ) or LEVELS
-    # SCALING_PIN=1 pins each run to exactly N CPUs (taskset -c 0..N-1).
-    # Unpinned, a local[2] JVM on an idle 32-core box borrows spare
-    # cores for GC / parquet compression / IO threads — free help a
-    # real 2-core executor would never get — which inflates the
-    # low-parallelism baseline and understates scaling efficiency.
-    pin = os.environ.get("SCALING_PIN", "") == "1"
-    for cpus in run_levels:
+    for cpus in sorted(set(LEVELS) | set(run_levels)):
+        if not fits(cpus):
+            print(f"run_scaling: skipping local[{cpus}]: SCALING_PIN=1 needs "
+                  f"{cpus} CPUs, this process may run on {len(usable)}",
+                  file=sys.stderr)
+    levels = tuple(filter(fits, LEVELS))
+    if not levels:
+        raise SystemExit("run_scaling: no level fits the CPU affinity mask")
+
+    ceiling = cpu_ceiling(levels)
+
+    for cpus in filter(fits, run_levels):
         for rep in range(REPEATS):
             out = os.path.join(work, f"r{cpus}_{int(time.time()*1000)}.json")
             env = dict(os.environ)
@@ -110,7 +126,7 @@ def main() -> None:
             cmd = [sys.executable, os.path.join(_REPO, "scripts", "scaling_bench.py"),
                    "--cpus", str(cpus), "--pages", pages_path, "--out", out]
             if pin:
-                cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
+                cmd = ["taskset", "-c", ",".join(map(str, usable[:cpus]))] + cmd
             subprocess.run(cmd, check=True, env=env)
 
     # best-of over ALL recorded runs in this work dir (repeat invocations
@@ -126,12 +142,12 @@ def main() -> None:
         n_runs[cpus] = n_runs.get(cpus, 0) + 1
         if cpus not in best or r["build_secs"] < best[cpus]["build_secs"]:
             best[cpus] = r
-    missing = [c for c in LEVELS if c not in best]
+    missing = [c for c in levels if c not in best]
     if missing:
         raise SystemExit(f"no runs recorded yet for levels {missing}")
 
     rows = []
-    for cpus in LEVELS:
+    for cpus in levels:
         r = best[cpus]
         rows.append(
             f"| local[{cpus}] | {r['build_secs']} | {r['docs_per_sec']} | "
@@ -139,7 +155,7 @@ def main() -> None:
         )
 
     pair_lines = []
-    for lo, hi in zip(LEVELS, LEVELS[1:]):
+    for lo, hi in zip(levels, levels[1:]):
         speedup = best[hi]["docs_per_sec"] / best[lo]["docs_per_sec"]
         ideal = hi / lo
         eff = speedup / ideal
@@ -153,7 +169,7 @@ def main() -> None:
             f"(host steal), so engine-relative-to-machine = **{rel:.2f}**"
         )
 
-    hi = best[LEVELS[-1]]
+    hi = best[levels[-1]]
     md = f"""# BENCH — two-parallelism scaling evidence
 
 Generated by `python scripts/run_scaling.py` on {time.strftime('%Y-%m-%d')}.
@@ -162,8 +178,8 @@ Same job (pages -> extract -> word terms + formula pair-tuple terms ->
 unified compressed postings index -> warm BM25 top-10 serving) on the
 same deterministic {N_DOCS}-page corpus (page_scale={PAGE_SCALE},
 ~{PAGE_SCALE * 90} words/page — realistic web-page size) at
-{len(LEVELS)} parallelism levels; best of
-{ {k: n_runs.get(k, 0) for k in LEVELS} } runs per level
+{len(levels)} parallelism levels; best of
+{ {k: n_runs.get(k, 0) for k in levels} } runs per level
 (shared-VM noise: identical runs vary up to 8x, see script docstring). local[N] stands in for an N-executor cluster (no real
 cluster in this sandbox); the pipeline is expressed entirely as
 DataFrame partitioning and runs unchanged under spark-submit.

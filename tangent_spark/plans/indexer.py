@@ -146,8 +146,32 @@ def build_index(
     """
     store = IndexStore(out_dir)
     store.set_config(cfg)
+    persisted: list[DataFrame] = []
+    try:
+        _build_stages(spark, store, docs, cfg, id_col, text_col, extra_terms, url_col,
+                      persisted)
+    finally:
+        for df in persisted:  # released when a stage fails, too
+            df.unpersist()
+    verify_index(spark, store)
+    return store
 
-    from concurrent.futures import ThreadPoolExecutor
+
+def _build_stages(
+    spark: SparkSession,
+    store: IndexStore,
+    docs: DataFrame,
+    cfg: IndexConfig,
+    id_col: str,
+    text_col: str | None,
+    extra_terms: DataFrame | None,
+    url_col: str | None,
+    persisted: list[DataFrame],
+) -> None:
+    """Run and commit build_index's stages that are not committed yet.
+    A frame persisted for reuse across stages is appended to
+    `persisted`, which the caller releases."""
+    from concurrent.futures import ThreadPoolExecutor, as_completed
 
     from pyspark.sql import Observation
     from pyspark.storagelevel import StorageLevel
@@ -156,16 +180,25 @@ def build_index(
         """Run independent stage tasks concurrently (guide §2.6: later
         jobs back-fill executors freed by an earlier job's straggler
         tail) and commit each from THIS thread as it completes —
-        manifest writes stay single-threaded, and a crash mid-group
-        loses only uncommitted stages, which resume re-runs."""
+        manifest writes stay single-threaded, and a failed stage loses
+        only itself: every other stage of the group still commits, then
+        the first failure is raised, and resume re-runs what is left."""
         if not tasks:
             return
         if len(tasks) == 1:
             store.commit_stage(*tasks[0]())
             return
+        error = None
         with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-            for fut in [pool.submit(t) for t in tasks]:
-                store.commit_stage(*fut.result())
+            for fut in as_completed([pool.submit(t) for t in tasks]):
+                try:
+                    stage = fut.result()
+                except Exception as e:
+                    error = error or e
+                    continue
+                store.commit_stage(*stage)
+        if error is not None:
+            raise error
 
     want_positions = cfg.store_positions and text_col is not None
     # ONE tokenize pass for positional builds: terms rows and positions
@@ -195,6 +228,7 @@ def build_index(
                 combined = terms_positions_df(
                     src, id_col, text_col, cfg.tokenizer
                 ).persist(StorageLevel.MEMORY_AND_DISK)
+                persisted.append(combined)
                 terms_src = combined.drop("positions")
             else:
                 terms_src = terms_df(src, id_col, text_col, cfg.tokenizer)
@@ -398,12 +432,6 @@ def build_index(
         group2.append(run_positions)
 
     _commit_all(group2)
-
-    if combined is not None:
-        combined.unpersist()
-
-    verify_index(spark, store)
-    return store
 
 
 def verify_index(spark: SparkSession, store: IndexStore) -> None:

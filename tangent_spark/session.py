@@ -4,6 +4,17 @@ local[N] in this sandbox stands in for an N-executor cluster; the code
 never assumes single-JVM (no driver-side collects in the hot path, all
 partitioning expressed via DataFrame ops), so the same plans run under
 spark-submit on a real cluster.
+
+Python workers start from ``tangent_spark._daemon`` instead of
+``pyspark.daemon`` (``spark.python.daemon.module``). The stock worker
+calls ``importlib.invalidate_caches()`` before every task, and on
+CPython 3.11 that re-reads ``pyspark.zip``'s whole directory once per
+cached importer, ~230 ms of every Python task; the daemon re-reads an
+archive only when its stat changed. It is set for the local master
+only: the daemon is imported before any task runs, and a cluster
+executor gets the package only through ``--py-files``, which
+``setup_spark_files`` adds per task. A daemon module an executor cannot
+import would fail every Python task, so clusters keep ``pyspark.daemon``.
 """
 
 from __future__ import annotations
@@ -99,6 +110,8 @@ def get_spark(
             .config("spark.executor.memory",
                     os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "6g"))
         )
+    else:
+        builder = builder.config("spark.python.daemon.module", "tangent_spark._daemon")
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, str(v))

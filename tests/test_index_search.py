@@ -116,6 +116,29 @@ def test_resume_after_partial_build(spark, corpus, tmp_path):
     verify_index(spark, store2)
 
 
+def test_failed_stage_keeps_finished_stages(spark, corpus, tmp_path, monkeypatch):
+    """A failing group-2 stage must not drop the stages that finished
+    next to it, and the positional build's persisted terms+positions
+    frame is released on the failure too."""
+    import tangent_spark.plans.wildcard as wildcard
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("stats stage failed")
+
+    monkeypatch.setattr(wildcard, "write_rev_terms", fail)
+    pages, _ = corpus
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    out = str(tmp_path / "failed")
+    cfg = IndexConfig(n_shards=4, block_size=32, store_positions=True)
+    with pytest.raises(RuntimeError, match="stats stage failed"):
+        build_index(spark, pages, out, cfg, url_col="url")
+    store = IndexStore(out)
+    assert not store.stage_done("stats")
+    assert all(store.stage_done(s) for s in ("terms", "docs", "postings", "positions"))
+    assert cache.numCachedEntries() == before
+
+
 def test_config_mismatch_rejected(spark, corpus, index_store):
     pages, _ = corpus
     with pytest.raises(ValueError):
