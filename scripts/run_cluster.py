@@ -11,7 +11,7 @@ cluster code path.
 
 Usage:
     python scripts/run_cluster.py            # bring-up + both levels + report
-    CLUSTER_WORKERS=2 CLUSTER_LEVELS=2 CLUSTER_REPEATS=1 python scripts/run_cluster.py
+    CLUSTER_LEVELS=2 CLUSTER_REPEATS=1 python scripts/run_cluster.py   # one level, 2 workers
     SCALING_PAGES=/tmp/scaling_v4/pages python scripts/run_cluster.py
 """
 
@@ -33,8 +33,8 @@ SPARK_HOME = os.path.dirname(os.path.abspath(pyspark.__file__))
 MASTER_URL = "spark://127.0.0.1:7077"
 PAGES = os.environ.get("SCALING_PAGES", "/tmp/scaling_v4/pages")
 WORK = os.environ.get("CLUSTER_WORK_DIR", "/tmp/cluster_r2")
-N_WORKERS = int(os.environ.get("CLUSTER_WORKERS", "8"))
 LEVELS = tuple(int(x) for x in os.environ.get("CLUSTER_LEVELS", "2,8").split(","))
+N_WORKERS = max(LEVELS)  # 1-core executors: one worker JVM per core of the widest level
 REPEATS = int(os.environ.get("CLUSTER_REPEATS", "2"))
 
 
@@ -108,15 +108,16 @@ def main() -> None:
         c = int(r["cpus"])
         if c not in best or r["build_secs"] < best[c]["build_secs"]:
             best[c] = r
-    report = {
+    pairs = {}
+    for lo, hi in zip(LEVELS, LEVELS[1:]):
+        speedup = best[hi]["docs_per_sec"] / best[lo]["docs_per_sec"]
+        pairs[f"{lo}->{hi}"] = {"speedup": round(speedup, 2),
+                                "efficiency": round(speedup / (hi / lo), 2)}
+    print(json.dumps({
         "mode": "standalone cluster, 1-core executor JVMs, spark-submit --py-files",
         "levels": {str(c): best[c] for c in LEVELS},
-    }
-    if len(LEVELS) == 2:
-        lo, hi = LEVELS
-        speedup = best[hi]["docs_per_sec"] / best[lo]["docs_per_sec"]
-        report.update(speedup=round(speedup, 2), efficiency=round(speedup / (hi / lo), 2))
-    print(json.dumps(report, indent=2))
+        "pairs": pairs,
+    }, indent=2))
 
 
 if __name__ == "__main__":

@@ -80,6 +80,28 @@ def main() -> None:
     os.makedirs(work, exist_ok=True)
     pages_path = os.path.join(work, "pages")
 
+    # SCALING_PIN=1 pins each run to exactly N CPUs: the first N of this
+    # process's affinity mask. Unpinned, a local[2] JVM on an idle
+    # 32-core box borrows spare cores for GC / parquet compression / IO
+    # threads — free help a real 2-core executor would never get — which
+    # inflates the low-parallelism baseline and understates scaling
+    # efficiency. A level wider than the mask cannot be pinned, and
+    # taskset would silently run it on fewer CPUs, so it is skipped.
+    pin = os.environ.get("SCALING_PIN", "") == "1"
+    usable = sorted(os.sched_getaffinity(0)) if pin else []
+
+    run_levels = tuple(
+        int(x) for x in os.environ.get("SCALING_RUN_LEVELS", "").split(",") if x
+    ) or LEVELS
+    skipped = sorted(c for c in set(LEVELS) | set(run_levels) if pin and c > len(usable))
+    if skipped:
+        print(f"run_scaling: skipping levels {skipped}: SCALING_PIN=1 pins N CPUs, "
+              f"and this process may run on {len(usable)}", file=sys.stderr)
+    levels = tuple(c for c in LEVELS if c not in skipped)
+    run_levels = tuple(c for c in run_levels if c not in skipped)
+    if len(levels) < 2:
+        raise SystemExit(f"run_scaling: the report needs two levels, {list(levels)} left")
+
     if not os.path.exists(os.path.join(pages_path, "_SUCCESS")):
         from tangent_spark.corpus import generate_pages, pages_with_doc_ids
         from tangent_spark.session import get_spark
@@ -91,34 +113,9 @@ def main() -> None:
         ).write.mode("overwrite").parquet(pages_path)
         spark.stop()
 
-    # SCALING_PIN=1 pins each run to exactly N CPUs: the first N of this
-    # process's affinity mask. Unpinned, a local[2] JVM on an idle
-    # 32-core box borrows spare cores for GC / parquet compression / IO
-    # threads — free help a real 2-core executor would never get — which
-    # inflates the low-parallelism baseline and understates scaling
-    # efficiency. A level wider than the mask cannot be pinned, and
-    # taskset would silently run it on fewer CPUs, so it is skipped.
-    pin = os.environ.get("SCALING_PIN", "") == "1"
-    usable = sorted(os.sched_getaffinity(0)) if pin else []
-
-    def fits(cpus: int) -> bool:
-        return not pin or cpus <= len(usable)
-
-    run_levels = tuple(
-        int(x) for x in os.environ.get("SCALING_RUN_LEVELS", "").split(",") if x
-    ) or LEVELS
-    for cpus in sorted(set(LEVELS) | set(run_levels)):
-        if not fits(cpus):
-            print(f"run_scaling: skipping local[{cpus}]: SCALING_PIN=1 needs "
-                  f"{cpus} CPUs, this process may run on {len(usable)}",
-                  file=sys.stderr)
-    levels = tuple(filter(fits, LEVELS))
-    if not levels:
-        raise SystemExit("run_scaling: no level fits the CPU affinity mask")
-
     ceiling = cpu_ceiling(levels)
 
-    for cpus in filter(fits, run_levels):
+    for cpus in run_levels:
         for rep in range(REPEATS):
             out = os.path.join(work, f"r{cpus}_{int(time.time()*1000)}.json")
             env = dict(os.environ)

@@ -19,6 +19,13 @@ directory of that read. A changed archive is still re-read, as before;
 an unchanged one costs one ``stat`` per importer. The guard is installed
 and primed in the daemon before it forks, so workers inherit both.
 
+The guard reads and sets zipimport internals of CPython 3.11: an
+importer's directory in ``_files`` and the module-wide
+``_zip_directory_cache``. It is installed only when the interpreter
+running the daemon is CPython 3.11 with that cache (``supported()``);
+on any other interpreter the module runs ``pyspark.daemon.manager()``
+unchanged.
+
 ``session.get_spark`` selects this module for the local master only.
 
     python -m tangent_spark._daemon [worker module]
@@ -27,6 +34,7 @@ and primed in the daemon before it forks, so workers inherit both.
 from __future__ import annotations
 
 import os
+import sys
 import zipimport
 
 _reread = zipimport.zipimporter.invalidate_caches
@@ -40,6 +48,15 @@ def _stat_key(path: str) -> tuple[int, int] | None:
     except OSError:
         return None
     return st.st_mtime_ns, st.st_size
+
+
+def supported() -> bool:
+    """Whether this interpreter is the one the stat guard was written for."""
+    return (
+        sys.implementation.name == "cpython"
+        and sys.version_info[:2] == (3, 11)
+        and hasattr(zipimport, "_zip_directory_cache")
+    )
 
 
 def invalidate_caches(self: zipimport.zipimporter) -> None:
@@ -59,8 +76,9 @@ def invalidate_caches(self: zipimport.zipimporter) -> None:
 if __name__ == "__main__":
     import importlib
 
-    zipimport.zipimporter.invalidate_caches = invalidate_caches
     from pyspark.daemon import manager
 
-    importlib.invalidate_caches()  # one read per archive, inherited by every fork
+    if supported():
+        zipimport.zipimporter.invalidate_caches = invalidate_caches
+        importlib.invalidate_caches()  # one read per archive, inherited by every fork
     manager()

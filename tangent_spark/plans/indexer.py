@@ -146,31 +146,7 @@ def build_index(
     """
     store = IndexStore(out_dir)
     store.set_config(cfg)
-    persisted: list[DataFrame] = []
-    try:
-        _build_stages(spark, store, docs, cfg, id_col, text_col, extra_terms, url_col,
-                      persisted)
-    finally:
-        for df in persisted:  # released when a stage fails, too
-            df.unpersist()
-    verify_index(spark, store)
-    return store
 
-
-def _build_stages(
-    spark: SparkSession,
-    store: IndexStore,
-    docs: DataFrame,
-    cfg: IndexConfig,
-    id_col: str,
-    text_col: str | None,
-    extra_terms: DataFrame | None,
-    url_col: str | None,
-    persisted: list[DataFrame],
-) -> None:
-    """Run and commit build_index's stages that are not committed yet.
-    A frame persisted for reuse across stages is appended to
-    `persisted`, which the caller releases."""
     from concurrent.futures import ThreadPoolExecutor, as_completed
 
     from pyspark.sql import Observation
@@ -208,230 +184,236 @@ def _build_stages(
     # positions stage re-reads it instead of re-stemming the corpus.
     combined = None
 
-    # ---- stage group 1: terms (tokenize + tf) ∥ docs dictionary -----------
-    group1 = []
-    if not store.stage_done("terms"):
-        from tangent_spark.functions.util import ensure_parallelism
+    try:
+        # ---- stage group 1: terms (tokenize + tf) ∥ docs dictionary -----------
+        group1 = []
+        if not store.stage_done("terms"):
+            from tangent_spark.functions.util import ensure_parallelism
 
-        if text_col is None:
-            # fielded build (plans/fielded.py): the caller supplies ALL
-            # term rows (field-prefixed, per-field dl) — no catch-all
-            # tokenization pass
-            if extra_terms is None:
-                raise ValueError("text_col=None requires extra_terms")
-            terms_src = extra_terms
-        else:
-            src = ensure_parallelism(docs)
-            if want_positions and not store.stage_done("positions"):
-                from tangent_spark.functions.tokenize import terms_positions_df
-
-                combined = terms_positions_df(
-                    src, id_col, text_col, cfg.tokenizer
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                persisted.append(combined)
-                terms_src = combined.drop("positions")
+            if text_col is None:
+                # fielded build (plans/fielded.py): the caller supplies ALL
+                # term rows (field-prefixed, per-field dl) — no catch-all
+                # tokenization pass
+                if extra_terms is None:
+                    raise ValueError("text_col=None requires extra_terms")
+                terms_src = extra_terms
             else:
-                terms_src = terms_df(src, id_col, text_col, cfg.tokenizer)
-            if extra_terms is not None:
-                terms_src = terms_src.unionByName(extra_terms)
+                src = ensure_parallelism(docs)
+                if want_positions and not store.stage_done("positions"):
+                    from tangent_spark.functions.tokenize import terms_positions_df
 
-        def run_terms():
-            t0 = time.time()
-            spark.sparkContext.setJobDescription("index: terms")
-            # row counts ride the write job itself (Observation) — no
-            # read-back count scan per stage
-            obs = Observation()
-            terms_src.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                "overwrite"
-            ).parquet(store.path("terms"))
-            return (
-                "terms",
-                ["terms"],
-                {"term_rows": int(obs.get["rows"]), "secs": time.time() - t0},
-            )
+                    combined = terms_positions_df(
+                        src, id_col, text_col, cfg.tokenizer
+                    ).persist(StorageLevel.MEMORY_AND_DISK)
+                    terms_src = combined.drop("positions")
+                else:
+                    terms_src = terms_df(src, id_col, text_col, cfg.tokenizer)
+                if extra_terms is not None:
+                    terms_src = terms_src.unionByName(extra_terms)
 
-        group1.append(run_terms)
-
-    if not store.stage_done("docs"):
-
-        def run_docs():
-            t0 = time.time()
-            spark.sparkContext.setJobDescription("index: docs")
-            cols = [F.col(id_col).alias("doc_id")]
-            if url_col:
-                cols.append(F.col(url_col).alias("url"))
-            cols += [F.col(c) for c in cfg.meta_cols]
-            obs = Observation()
-            docs.select(*cols).observe(
-                obs, F.count(F.lit(1)).alias("rows")
-            ).write.mode("overwrite").parquet(store.path("docs"))
-            return (
-                "docs",
-                ["docs"],
-                {"n_docs": int(obs.get["rows"]), "secs": time.time() - t0},
-            )
-
-        group1.append(run_docs)
-
-    _commit_all(group1)
-
-    terms = spark.read.parquet(store.path("terms"))
-
-    # ---- stage group 2: stats ∥ postings ∥ positions ----------------------
-    # All three read only group-1 outputs (terms parquet, docs counter,
-    # the persisted combined frame), so they overlap: the JVM-side
-    # stats/positions shuffles run while the postings encode kernel has
-    # the Python workers busy.
-    group2 = []
-    if not store.stage_done("stats"):
-
-        def run_stats():
-            t0 = time.time()
-            spark.sparkContext.setJobDescription("index: stats")
-            n_docs = store.read_manifest()["stages"]["docs"]["counters"]["n_docs"]
-            obs = Observation()
-            (
-                terms.groupBy("term")
-                .agg(F.count("*").cast("int").alias("df"), F.sum("tf").alias("cf"))
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("vocab"),
-                    F.sum("cf").alias("total_tokens"),
+            def run_terms():
+                t0 = time.time()
+                spark.sparkContext.setJobDescription("index: terms")
+                # row counts ride the write job itself (Observation) — no
+                # read-back count scan per stage
+                obs = Observation()
+                terms_src.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                    "overwrite"
+                ).parquet(store.path("terms"))
+                return (
+                    "terms",
+                    ["terms"],
+                    {"term_rows": int(obs.get["rows"]), "secs": time.time() - t0},
                 )
-                .write.mode("overwrite")
-                .parquet(store.path("term_stats"))
-            )
-            vocab = int(obs.get["vocab"])
-            total_tokens = obs.get["total_tokens"]
-            # corpus stats DERIVED from the term_stats write's own
-            # observation instead of a second full terms scan:
-            # sum(cf) == sum(tf) exactly (integer sums), and avgdl is
-            # the same IEEE double division as before. avgdl is defined
-            # over the UNIFIED term space: dl(doc) = total term
-            # occurrences across fields = sum(tf) (F.first("dl") over
-            # the union would be partition-order-dependent and could
-            # flip avgdl — and every BM25 score — between builds).
-            avgdl = (
-                total_tokens / n_docs
-                if total_tokens is not None and n_docs
-                else None
-            )
-            spark.range(1).select(
-                F.lit(n_docs).alias("n_docs"),
-                F.lit(total_tokens).cast("long").alias("total_tokens"),
-                F.lit(avgdl).cast("double").alias("avgdl"),
-            ).write.mode("overwrite").parquet(store.path("corpus_stats"))
-            # reversed term dictionary (Solr ReversedWildcardFilter as
-            # table layout): regenerated with every term_stats rewrite
-            # so leading-wildcard expansion prunes instead of scanning
-            # the vocabulary
-            from tangent_spark.plans.wildcard import REV_TABLE, write_rev_terms
 
-            write_rev_terms(spark, store.path("term_stats"), store.path(REV_TABLE))
-            return (
-                "stats",
-                ["term_stats", "corpus_stats", REV_TABLE],
-                {"vocab": vocab, "n_docs": n_docs, "secs": time.time() - t0},
-            )
+            group1.append(run_terms)
 
-        group2.append(run_stats)
+        if not store.stage_done("docs"):
 
-    if not store.stage_done("postings"):
-
-        def run_postings():
-            t0 = time.time()
-            spark.sparkContext.setJobDescription("index: postings")
-            shard_parts = max(cfg.n_shards, spark.sparkContext.defaultParallelism)
-            # Partition on (term, shard): every (term, shard) run lands
-            # intact in one partition, while a head term's runs from
-            # different shards spread across partitions — no single
-            # reducer ever owns a global head term. term-major sort
-            # order makes the written parquet files term-sorted, so
-            # query-term filters prune at row-group granularity. No
-            # partitionBy("shard") on write: every query fans out to
-            # ALL shards (doc-sharded layout), so directory-level shard
-            # pruning would never fire and dynamic-partition writes
-            # only cost time + small files.
-            postings = (
-                terms.withColumn(
-                    "shard", (F.col("doc_id") % cfg.n_shards).cast("int")
+            def run_docs():
+                t0 = time.time()
+                spark.sparkContext.setJobDescription("index: docs")
+                cols = [F.col(id_col).alias("doc_id")]
+                if url_col:
+                    cols.append(F.col(url_col).alias("url"))
+                cols += [F.col(c) for c in cfg.meta_cols]
+                obs = Observation()
+                docs.select(*cols).observe(
+                    obs, F.count(F.lit(1)).alias("rows")
+                ).write.mode("overwrite").parquet(store.path("docs"))
+                return (
+                    "docs",
+                    ["docs"],
+                    {"n_docs": int(obs.get["rows"]), "secs": time.time() - t0},
                 )
-                .repartition(shard_parts, "term", "shard")
-                .sortWithinPartitions("term", "shard", "doc_id")
-                .mapInPandas(_encode_runs(cfg), schema=POSTINGS_SCHEMA)
-            )
-            postings.write.mode("overwrite").parquet(store.path("postings"))
-            # per-shard lineage counters (north_rule: per-partition
-            # lineage+metrics)
-            p = spark.read.parquet(store.path("postings"))
-            metrics = p.groupBy("shard").agg(
-                F.count("*").alias("n_terms"),
-                F.sum("df").alias("n_postings"),
+
+            group1.append(run_docs)
+
+        _commit_all(group1)
+
+        terms = spark.read.parquet(store.path("terms"))
+
+        # ---- stage group 2: stats ∥ postings ∥ positions ----------------------
+        # All three read only group-1 outputs (terms parquet, docs counter,
+        # the persisted combined frame), so they overlap: the JVM-side
+        # stats/positions shuffles run while the postings encode kernel has
+        # the Python workers busy.
+        group2 = []
+        if not store.stage_done("stats"):
+
+            def run_stats():
+                t0 = time.time()
+                spark.sparkContext.setJobDescription("index: stats")
+                n_docs = store.read_manifest()["stages"]["docs"]["counters"]["n_docs"]
+                obs = Observation()
                 (
-                    F.sum(F.length("docs_blob"))
-                    + F.sum(F.length("tfs_blob"))
-                    + F.sum(F.length("dls_blob"))
-                ).alias("postings_bytes"),
-            )
-            mrows = metrics.collect()  # one action; write the table from rows
-            spark.createDataFrame(mrows, metrics.schema).write.mode(
-                "overwrite"
-            ).parquet(store.path("metrics"))
-            total_postings = sum(r["n_postings"] for r in mrows)
-            total_bytes = sum(r["postings_bytes"] for r in mrows)
-            return (
-                "postings",
-                ["postings", "metrics"],
-                {
-                    "shards": len(mrows),
-                    "postings": int(total_postings),
-                    "postings_bytes": int(total_bytes),
-                    "secs": time.time() - t0,
-                },
-            )
-
-        group2.append(run_postings)
-
-    # positions (optional; phrase/proximity support; text_col=None
-    # fielded builds have no catch-all text to position)
-    if want_positions and not store.stage_done("positions"):
-
-        def run_positions():
-            t0 = time.time()
-            spark.sparkContext.setJobDescription("index: positions")
-            if combined is not None:
-                src = combined.select("doc_id", "term", "positions")
-            else:
-                # resume path (terms committed by an earlier run): no
-                # combined frame to reuse — tokenize for positions only
-                from tangent_spark.functions.tokenize import positions_df
-
-                src = positions_df(docs, id_col, text_col, cfg.tokenizer)
-            shard_parts = max(cfg.n_shards, spark.sparkContext.defaultParallelism)
-            # same doc-sharded, term-major-sorted layout as postings so
-            # a phrase query's term filter prunes at row-group
-            # granularity and the per-term scans co-locate with the
-            # shard's postings
-            pos = (
-                src.withColumn(
-                    "shard", (F.col("doc_id") % cfg.n_shards).cast("int")
+                    terms.groupBy("term")
+                    .agg(F.count("*").cast("int").alias("df"), F.sum("tf").alias("cf"))
+                    .observe(
+                        obs,
+                        F.count(F.lit(1)).alias("vocab"),
+                        F.sum("cf").alias("total_tokens"),
+                    )
+                    .write.mode("overwrite")
+                    .parquet(store.path("term_stats"))
                 )
-                .repartition(shard_parts, "term", "shard")
-                .sortWithinPartitions("term", "shard", "doc_id")
-            )
-            obs = Observation()
-            pos.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                "overwrite"
-            ).parquet(store.path("positions"))
-            return (
-                "positions",
-                ["positions"],
-                {"position_rows": int(obs.get["rows"]), "secs": time.time() - t0},
-            )
+                vocab = int(obs.get["vocab"])
+                total_tokens = obs.get["total_tokens"]
+                # corpus stats DERIVED from the term_stats write's own
+                # observation instead of a second full terms scan:
+                # sum(cf) == sum(tf) exactly (integer sums), and avgdl is
+                # the same IEEE double division as before. avgdl is defined
+                # over the UNIFIED term space: dl(doc) = total term
+                # occurrences across fields = sum(tf) (F.first("dl") over
+                # the union would be partition-order-dependent and could
+                # flip avgdl — and every BM25 score — between builds).
+                avgdl = (
+                    total_tokens / n_docs
+                    if total_tokens is not None and n_docs
+                    else None
+                )
+                spark.range(1).select(
+                    F.lit(n_docs).alias("n_docs"),
+                    F.lit(total_tokens).cast("long").alias("total_tokens"),
+                    F.lit(avgdl).cast("double").alias("avgdl"),
+                ).write.mode("overwrite").parquet(store.path("corpus_stats"))
+                # reversed term dictionary (Solr ReversedWildcardFilter as
+                # table layout): regenerated with every term_stats rewrite
+                # so leading-wildcard expansion prunes instead of scanning
+                # the vocabulary
+                from tangent_spark.plans.wildcard import REV_TABLE, write_rev_terms
 
-        group2.append(run_positions)
+                write_rev_terms(spark, store.path("term_stats"), store.path(REV_TABLE))
+                return (
+                    "stats",
+                    ["term_stats", "corpus_stats", REV_TABLE],
+                    {"vocab": vocab, "n_docs": n_docs, "secs": time.time() - t0},
+                )
 
-    _commit_all(group2)
+            group2.append(run_stats)
+
+        if not store.stage_done("postings"):
+
+            def run_postings():
+                t0 = time.time()
+                spark.sparkContext.setJobDescription("index: postings")
+                shard_parts = max(cfg.n_shards, spark.sparkContext.defaultParallelism)
+                # Partition on (term, shard): every (term, shard) run lands
+                # intact in one partition, while a head term's runs from
+                # different shards spread across partitions — no single
+                # reducer ever owns a global head term. term-major sort
+                # order makes the written parquet files term-sorted, so
+                # query-term filters prune at row-group granularity. No
+                # partitionBy("shard") on write: every query fans out to
+                # ALL shards (doc-sharded layout), so directory-level shard
+                # pruning would never fire and dynamic-partition writes
+                # only cost time + small files.
+                postings = (
+                    terms.withColumn(
+                        "shard", (F.col("doc_id") % cfg.n_shards).cast("int")
+                    )
+                    .repartition(shard_parts, "term", "shard")
+                    .sortWithinPartitions("term", "shard", "doc_id")
+                    .mapInPandas(_encode_runs(cfg), schema=POSTINGS_SCHEMA)
+                )
+                postings.write.mode("overwrite").parquet(store.path("postings"))
+                # per-shard lineage counters (north_rule: per-partition
+                # lineage+metrics)
+                p = spark.read.parquet(store.path("postings"))
+                metrics = p.groupBy("shard").agg(
+                    F.count("*").alias("n_terms"),
+                    F.sum("df").alias("n_postings"),
+                    (
+                        F.sum(F.length("docs_blob"))
+                        + F.sum(F.length("tfs_blob"))
+                        + F.sum(F.length("dls_blob"))
+                    ).alias("postings_bytes"),
+                )
+                mrows = metrics.collect()  # one action; write the table from rows
+                spark.createDataFrame(mrows, metrics.schema).write.mode(
+                    "overwrite"
+                ).parquet(store.path("metrics"))
+                total_postings = sum(r["n_postings"] for r in mrows)
+                total_bytes = sum(r["postings_bytes"] for r in mrows)
+                return (
+                    "postings",
+                    ["postings", "metrics"],
+                    {
+                        "shards": len(mrows),
+                        "postings": int(total_postings),
+                        "postings_bytes": int(total_bytes),
+                        "secs": time.time() - t0,
+                    },
+                )
+
+            group2.append(run_postings)
+
+        # positions (optional; phrase/proximity support; text_col=None
+        # fielded builds have no catch-all text to position)
+        if want_positions and not store.stage_done("positions"):
+
+            def run_positions():
+                t0 = time.time()
+                spark.sparkContext.setJobDescription("index: positions")
+                if combined is not None:
+                    src = combined.select("doc_id", "term", "positions")
+                else:
+                    # resume path (terms committed by an earlier run): no
+                    # combined frame to reuse — tokenize for positions only
+                    from tangent_spark.functions.tokenize import positions_df
+
+                    src = positions_df(docs, id_col, text_col, cfg.tokenizer)
+                shard_parts = max(cfg.n_shards, spark.sparkContext.defaultParallelism)
+                # same doc-sharded, term-major-sorted layout as postings so
+                # a phrase query's term filter prunes at row-group
+                # granularity and the per-term scans co-locate with the
+                # shard's postings
+                pos = (
+                    src.withColumn(
+                        "shard", (F.col("doc_id") % cfg.n_shards).cast("int")
+                    )
+                    .repartition(shard_parts, "term", "shard")
+                    .sortWithinPartitions("term", "shard", "doc_id")
+                )
+                obs = Observation()
+                pos.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                    "overwrite"
+                ).parquet(store.path("positions"))
+                return (
+                    "positions",
+                    ["positions"],
+                    {"position_rows": int(obs.get["rows"]), "secs": time.time() - t0},
+                )
+
+            group2.append(run_positions)
+
+        _commit_all(group2)
+    finally:
+        if combined is not None:  # released when a stage fails, too
+            combined.unpersist()
+
+    verify_index(spark, store)
+    return store
 
 
 def verify_index(spark: SparkSession, store: IndexStore) -> None:

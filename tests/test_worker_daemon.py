@@ -38,13 +38,24 @@ def _run_in_worker(spark, fn, schema: str) -> list:
     return spark.range(1, numPartitions=1).mapInPandas(udf, schema).collect()
 
 
+guarded_only = pytest.mark.skipif(
+    not _daemon.supported(),
+    reason="the stat guard is written for CPython 3.11's zipimport",
+)
+
+
 @local_only
 def test_worker_carries_stat_guard(spark):
     def probe():
-        return {"src": zipimport.zipimporter.invalidate_caches.__code__.co_filename}
+        fn = zipimport.zipimporter.invalidate_caches
+        return {"src": fn.__code__.co_filename if hasattr(fn, "__code__") else "",
+                "supported": _daemon.supported()}
 
-    (row,) = _run_in_worker(spark, probe, "src string")
-    assert os.path.realpath(row["src"]) == os.path.realpath(DAEMON_FILE)
+    (row,) = _run_in_worker(spark, probe, "src string, supported boolean")
+    if row["supported"]:
+        assert os.path.realpath(row["src"]) == os.path.realpath(DAEMON_FILE)
+    else:  # any other interpreter runs the stock daemon, unguarded
+        assert os.path.realpath(row["src"]) != os.path.realpath(DAEMON_FILE)
 
 
 def test_worker_imports_zip_added_after_start(spark, tmp_path):
@@ -62,6 +73,7 @@ def test_worker_imports_zip_added_after_start(spark, tmp_path):
     assert _run_in_worker(spark, probe, "value string")[0]["value"] == "added late"
 
 
+@guarded_only
 def test_stat_guard_rereads_only_changed_archives(tmp_path, monkeypatch):
     path = str(tmp_path / "guard.zip")
     _write_zip(path, "guard_a", "a")
