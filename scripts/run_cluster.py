@@ -13,15 +13,24 @@ Usage:
     python scripts/run_cluster.py            # bring-up + both levels + report
     CLUSTER_LEVELS=2 CLUSTER_REPEATS=1 python scripts/run_cluster.py   # one level, 2 workers
     SCALING_PAGES=/tmp/scaling_v4/pages python scripts/run_cluster.py
+
+Each run works in its own temporary directory (logs, worker dirs, the
+package zip and the per-submit results; under CLUSTER_WORK_DIR when
+set) and reports only the results it wrote there. The master and worker
+JVMs it starts are stopped when it exits; a master or workers already
+running are reused and left running. The directory is removed after a
+successful run and kept, with its path printed, after a failed one.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
+import shutil
+import signal
 import subprocess
 import sys
+import tempfile
 import time
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -32,20 +41,36 @@ import pyspark  # noqa: E402
 SPARK_HOME = os.path.dirname(os.path.abspath(pyspark.__file__))
 MASTER_URL = "spark://127.0.0.1:7077"
 PAGES = os.environ.get("SCALING_PAGES", "/tmp/scaling_v4/pages")
-WORK = os.environ.get("CLUSTER_WORK_DIR", "/tmp/cluster_r2")
+WORK_PARENT = os.environ.get("CLUSTER_WORK_DIR")  # None: the system temp dir
 LEVELS = tuple(int(x) for x in os.environ.get("CLUSTER_LEVELS", "2,8").split(","))
 N_WORKERS = max(LEVELS)  # 1-core executors: one worker JVM per core of the widest level
 REPEATS = int(os.environ.get("CLUSTER_REPEATS", "2"))
 
 
 def _spawn(args, log):
-    return subprocess.Popen(
-        args, stdout=open(log, "w"), stderr=subprocess.STDOUT,
-        start_new_session=True,
-    )
+    with open(log, "w") as f:
+        return subprocess.Popen(
+            args, stdout=f, stderr=subprocess.STDOUT, start_new_session=True,
+        )
 
 
-def ensure_cluster() -> None:
+def stop(procs: list[subprocess.Popen]) -> None:
+    """SIGTERM each process group this run started, SIGKILL stragglers."""
+    for p in procs:
+        if p.poll() is None:
+            os.killpg(p.pid, signal.SIGTERM)
+    deadline = time.monotonic() + 30
+    for p in procs:
+        try:
+            p.wait(timeout=max(0.0, deadline - time.monotonic()))
+        except subprocess.TimeoutExpired:
+            os.killpg(p.pid, signal.SIGKILL)
+            p.wait()
+
+
+def ensure_cluster(work: str, procs: list[subprocess.Popen]) -> None:
+    """Start whatever part of the cluster is not running yet, appending
+    each started process to `procs`."""
     def up(pattern):
         return subprocess.run(
             ["pgrep", "-fc", pattern], capture_output=True, text=True
@@ -53,35 +78,35 @@ def ensure_cluster() -> None:
 
     cls = os.path.join(SPARK_HOME, "bin", "spark-class")
     if not up("deploy.master.Master"):
-        _spawn(
+        procs.append(_spawn(
             [cls, "org.apache.spark.deploy.master.Master",
              "--host", "127.0.0.1", "--port", "7077", "--webui-port", "8080"],
-            "/tmp/spark_master.log",
-        )
+            os.path.join(work, "master.log"),
+        ))
         time.sleep(10)
     n_workers = int(
         subprocess.run(["pgrep", "-fc", "deploy.worker.Worker"],
                        capture_output=True, text=True).stdout.strip() or "0"
     )
     for i in range(n_workers, N_WORKERS):
-        _spawn(
+        procs.append(_spawn(
             [cls, "org.apache.spark.deploy.worker.Worker", MASTER_URL,
              "--cores", "1", "--memory", "12g", "--port", "0",
              "--webui-port", str(8200 + i),
-             "--work-dir", f"/tmp/spark_workers/w{i}"],
-            f"/tmp/spark_worker_{i}.log",
-        )
+             "--work-dir", os.path.join(work, f"w{i}")],
+            os.path.join(work, f"worker_{i}.log"),
+        ))
     time.sleep(15)
 
 
-def submit(cores: int, out: str) -> None:
+def submit(cores: int, work: str, out: str) -> None:
     env = dict(os.environ)
     env.update(
         SPARK_GRAFT_MASTER=MASTER_URL,
         SPARK_GRAFT_EXECUTOR_CORES="1",
         SPARK_GRAFT_EXECUTOR_MEM="6g",
     )
-    zip_path = "/tmp/tangent_spark.zip"
+    zip_path = os.path.join(work, "tangent_spark.zip")
     subprocess.run(
         ["zip", "-qr", zip_path, "tangent_spark"], cwd=_REPO, check=True
     )
@@ -96,15 +121,28 @@ def submit(cores: int, out: str) -> None:
 
 
 def main() -> None:
-    os.makedirs(WORK, exist_ok=True)
-    ensure_cluster()
-    for cores in LEVELS:
-        for _ in range(REPEATS):
-            submit(cores, os.path.join(WORK, f"c{cores}_{int(time.time()*1000)}.json"))
+    if WORK_PARENT:
+        os.makedirs(WORK_PARENT, exist_ok=True)
+    work = tempfile.mkdtemp(prefix="tangent_cluster_", dir=WORK_PARENT)
+    procs: list[subprocess.Popen] = []
+    results = []
+    try:
+        ensure_cluster(work, procs)
+        for cores in LEVELS:
+            for rep in range(REPEATS):
+                out = os.path.join(work, f"c{cores}_{rep}.json")
+                submit(cores, work, out)
+                with open(out) as f:
+                    results.append(json.load(f))
+    finally:
+        stop(procs)
+        if len(results) == len(LEVELS) * REPEATS:
+            shutil.rmtree(work, ignore_errors=True)
+        else:
+            print(f"run_cluster: failed; logs kept in {work}", file=sys.stderr)
 
     best: dict[int, dict] = {}
-    for path in glob.glob(os.path.join(WORK, "c*_*.json")):
-        r = json.load(open(path))
+    for r in results:
         c = int(r["cpus"])
         if c not in best or r["build_secs"] < best[c]["build_secs"]:
             best[c] = r

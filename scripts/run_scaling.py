@@ -106,7 +106,7 @@ def main() -> None:
         from tangent_spark.corpus import generate_pages, pages_with_doc_ids
         from tangent_spark.session import get_spark
 
-        spark = get_spark(app="scaling_gen", cpus=32)
+        spark = get_spark(app="scaling_gen", cpus=len(os.sched_getaffinity(0)))
         pages_with_doc_ids(
             generate_pages(spark, N_DOCS, partitions=64, page_scale=PAGE_SCALE),
             partitions=64,

@@ -33,6 +33,11 @@ Routing rules (deterministic, inspectable via `route()`):
 they are separate IndexStores because their build inputs differ
 (tokenized text vs extracted MathML), exactly as the reference keeps
 Solr cores separate from its math index files.
+
+Which option composes with which route is stated in one place, the
+`_ROUTES` table: search() serves a call with the first entry whose key
+is the query's route or an option the caller set, and rejects every
+other given option that entry does not list (raise, never drop).
 """
 
 from __future__ import annotations
@@ -41,7 +46,28 @@ import re
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from tangent_spark.plans.boolean import boolean_topk, filtered_topk, parse_range_clauses
+from tangent_spark.plans.fielded import field_query_topk, fielded_topk
+from tangent_spark.plans.formula import dice_topk_docs
+from tangent_spark.plans.fuzzy import fuzzy_topk, is_fuzzy_token
+from tangent_spark.plans.group import grouped_topk
+from tangent_spark.plans.hybrid import hybrid_topk
+from tangent_spark.plans.phrase import phrase_prefix_topk
+from tangent_spark.plans.rerank import combine_math_text
+from tangent_spark.plans.rescore import phrase_rescore_topk
+from tangent_spark.plans.search import (
+    bm25_topk_synonyms,
+    bm25_topk_wand,
+    boosted_topk,
+    elevated_topk,
+    function_boosted_topk,
+    match_all_docs,
+    query_terms,
+)
+from tangent_spark.plans.sortby import sorted_topk
+from tangent_spark.plans.wildcard import is_regexp_token, regexp_topk, wildcard_topk
 from tangent_spark.sources.store import IndexStore
 
 _MATH = re.compile(r"<math|<mws:qvar", re.IGNORECASE)
@@ -66,9 +92,6 @@ def route(query: str) -> str:
     `*`/`?`/`~` (they are formula markup, not operators). Regexp
     wins over fuzzy/wildcard (a `/.../` token is unambiguous and its
     body may contain their metacharacters)."""
-    from tangent_spark.plans.fuzzy import is_fuzzy_token
-    from tangent_spark.plans.wildcard import is_regexp_token
-
     if query.strip() == "*:*":
         return "match_all"  # Solr q=*:* — before the wildcard check
     if _MATH.search(query):
@@ -82,6 +105,46 @@ def route(query: str) -> str:
     if _WILD.search(query):
         return "wildcard"
     return "bm25"
+
+
+# The composition rule, stated once. search() serves a call with the
+# FIRST entry (in this order) whose key is the query's route (route())
+# or an option the caller set; the options that entry lists compose
+# with it, and any other given option raises the entry's message.
+_MULTI_TERM = "{} not supported with %s terms (no metadata filter; only `after`)"
+_ROUTES: dict[str, tuple[tuple[str, ...], str]] = {
+    "phrase_prefix": ((), "{} not supported with phrase_prefix"),
+    "match_all": (
+        ("where", "after", "sort_by"), "{} not supported with the match-all query"
+    ),
+    "formula": ((), "{} not supported on the formula route"),
+    "boolean": (
+        ("where", "min_should_match", "unordered_phrases"),
+        "{} only supported on the plain BM25 route (query routed to 'boolean')",
+    ),
+    "regexp": (("after",), _MULTI_TERM % "regexp"),
+    "fuzzy": (("after",), _MULTI_TERM % "fuzzy"),
+    "wildcard": (("after",), _MULTI_TERM % "wildcard"),
+    "vector": (("where",), "{} not supported with vector search"),
+    "min_should_match": (("where",), "min_should_match is not combinable with {}"),
+    "where": ((), (
+        "{} not supported with a metadata filter on a plain query; shaping "
+        "is only supported on the plain BM25 route without one"
+    )),
+    "pinned": ((), "pinned elevation combines with no other option, got {}"),
+    "sort_by": ((), "sort_by is not combinable with {}"),
+    "rescore": ((), "rescore combines with no other option, got {}"),
+    "recency_boost": (("after",), "recency_boost combines only with `after`, got {}"),
+    "boost_fn": (("after",), "boost_fn combines only with `after`, got {}"),
+    "boosts": (("after", "tie"), "{} not supported with fielded boosts"),
+    "synonyms": (("after",), "{} not supported with synonyms"),
+    "group_by": ((), "{} not supported with grouping"),
+    "bm25": (("after",), (
+        "{} not supported on a plain query (tie requires fielded boosts, "
+        "unordered_phrases a boolean query)"
+    )),
+}
+_RESCORE_KEYS = {"weight", "window", "slop", "in_order", "phrase"}
 
 
 def search(
@@ -127,9 +190,10 @@ def search(
     (plans.boolean.parse_range_clauses); a pure-range query serves as
     `*:*` match-all + filter.
 
-    Round-5 result-shaping options (plain-BM25 route only — each maps
-    to its Solr/Lucene counterpart and raises on routes that do not
-    support it rather than silently ignoring the request):
+    Result-shaping options, each mapped to its Solr/Lucene counterpart.
+    Which options compose with which route and with each other is the
+    `_ROUTES` table; any combination it does not list raises ValueError
+    rather than silently ignoring the request:
 
       * after=(score, doc_id) — cursor deep paging (Solr cursorMark /
         Lucene searchAfter); the next page strictly after the cursor.
@@ -139,7 +203,7 @@ def search(
         (doc_id, score) shape.
       * boosts={field: weight} — fielded search over a
         plans.fielded.build_fielded_index store (Solr title:q^2
-        OR body:q); combinable with `after`. The query may scope
+        OR body:q). The query may scope
         clauses to fields with Lucene classic-QueryParser syntax
         (`title:spark body:proof^2 data` — scoped clauses are single
         boosted TermQueries, bare clauses expand over boosts as qf);
@@ -148,17 +212,17 @@ def search(
         plans.fielded.field_query_topk.
       * synonyms={token: [expansion, ...]} — query-time synonym
         expansion (Lucene SynonymQuery: group max-df idf, per-doc tf
-        sum); combinable with `after`.
+        sum).
       * sort_by / sort_ascending — order the match set by a metadata
         column instead of relevance (Solr sort=<field> asc|desc);
         returns (doc_id, <field>) rows.
       * recency_boost={'by': ts_col, 'now': datetime, ...} — kwargs
         for plans.search.boosted_topk (Solr boost=recip: BM25 x
-        1/(1 + age/half_life)); combinable with `after`.
+        1/(1 + age/half_life)).
       * boost_fn='<sql expr>' — function query (Solr boost=<func> /
         Lucene FunctionScoreQuery): BM25 x f(doc) for any positive
         SQL expression over the index's meta_cols, e.g.
-        `1.0 + 0.1 * ln(n_chars)`; combinable with `after`
+        `1.0 + 0.1 * ln(n_chars)`
         (plans.search.function_boosted_topk — pruning stays exact via
         power-of-two weight normalization).
       * rescore={'weight': w, 'window': n, 'slop': s, 'in_order': b,
@@ -167,38 +231,30 @@ def search(
         is re-scored as BM25 + w x phrase_bm25 of the query (or an
         explicit `phrase`) and re-sorted
         (plans.rescore.phrase_rescore_topk; requires a positional
-        index). Combines with no other shaping option.
+        index).
       * vector=[...] — hybrid retrieval (ES 8.8 `rrf` retriever /
         OpenSearch hybrid query): the BM25 top-n_per_leg and the IVF
         ANN top-n_per_leg for the probe vector (SearchStores.vectors),
         fused by Reciprocal Rank Fusion with constant rrf_k; returns
-        (doc_id, score, lex_rank, vec_rank). Composes with `where`
-        (the ES 8 shape: the same filter clause on both retriever
-        legs — lexical via filtered_topk, vector via
-        ann_topk_ivf_filtered) but with no other shaping option (each
-        would need its own fusion contract).
+        (doc_id, score, lex_rank, vec_rank). A `where` filter applies
+        to both retriever legs (the ES 8 shape: lexical via
+        filtered_topk, vector via ann_topk_ivf_filtered).
       * pinned=[doc_id, ...] — query elevation (Solr
         QueryElevationComponent): the given ids occupy the first ranks
         in order, organic results fill the rest; returns the elevation
         contract columns (rank, doc_id, score, elevated), not the
-        plain (doc_id, score) shape. Combines with no other shaping
-        option.
+        plain (doc_id, score) shape.
       * min_should_match — Solr mm spec (int, '-n', 'p%', '-p%'; see
         plans.boolean.resolve_mm): matches must contain at least that
-        many DISTINCT should terms; serves the bm25/boolean routes
-        (including `where` filters) and rejects the other routes and
-        shaping options rather than silently ignoring the constraint.
+        many DISTINCT should terms.
       * unordered_phrases — serve every `"..."~N` phrase clause with
         Lucene sloppy (reorder-tolerant) matching instead of the
-        default in-order slack (plans.phrase._unordered_tf); boolean
-        route only (the only route that carries phrases), rejected
-        elsewhere.
+        default in-order slack (plans.phrase._unordered_tf).
       * phrase_prefix — ES match_phrase_prefix (search-as-you-type):
         the WHOLE query is one phrase whose LAST token is a prefix
         (its trailing '*' optional), expanded against the vocabulary
         in term order up to `max_expansions`
-        (plans.phrase.phrase_prefix_topk); returns (doc_id, phrase_tf)
-        and combines with no other shaping option.
+        (plans.phrase.phrase_prefix_topk); returns (doc_id, phrase_tf).
 
     In-query Lucene boost syntax (`matrix^2.5`, `+must^3`, `"a b"^2`)
     is honored on the plain-BM25 and boolean routes (warm and cold,
@@ -209,437 +265,127 @@ def search(
     """
     if isinstance(stores, IndexStore):
         stores = SearchStores(words=stores)
-    if phrase_prefix:
-        # ES match_phrase_prefix (search-as-you-type): the WHOLE query
-        # is one phrase whose last token is a prefix; see
-        # plans.phrase.phrase_prefix_topk. No other shaping option has
-        # fusion semantics with a prefix phrase — reject, don't drop.
-        bad = [
-            n
-            for n, on in (
-                ("where", where is not None),
-                ("after", after is not None),
-                ("group_by", group_by is not None),
-                ("boosts", boosts is not None),
-                ("tie", tie is not None),
-                ("synonyms", synonyms is not None),
-                ("sort_by", sort_by is not None),
-                ("recency_boost", recency_boost is not None),
-                ("pinned", pinned is not None),
-                ("boost_fn", boost_fn is not None),
-                ("rescore", rescore is not None),
-                ("vector", vector is not None),
-                ("min_should_match", bool(min_should_match)),
-                ("unordered_phrases", unordered_phrases),
-            )
-            if on
-        ]
-        if bad:
-            raise ValueError(f"{'/'.join(bad)} not supported with phrase_prefix")
-        from tangent_spark.plans.phrase import phrase_prefix_topk
-
-        return phrase_prefix_topk(
-            spark, stores.words, query, k, max_expansions=max_expansions
-        )
-    # Lucene/Solr range clauses over the index's metadata fields
-    # (`warc_ts:[a TO b]`, `{..}` exclusive, `*` open ends, `-` negates)
-    # compile to the filtered route's SQL predicate and leave the
-    # scoring query to route normally; a pure-filter query (nothing
-    # left after stripping) is Solr `q=*:* fq=range`. Clauses on
-    # unknown fields stay query text (the parser-wide Lucene degrade).
-    from tangent_spark.plans.boolean import parse_range_clauses
-
-    _rng_rest, _rng_where = parse_range_clauses(
-        query, stores.words.get_config().meta_cols
-    )
-    if _rng_where is not None:
-        query = _rng_rest or "*:*"
-        where = _rng_where if where is None else f"({where}) AND ({_rng_where})"
+    words = stores.words
+    if not phrase_prefix:
+        # Lucene/Solr range clauses over the index's metadata fields
+        # (`warc_ts:[a TO b]`, `{..}` exclusive, `*` open ends, `-`
+        # negates) fold into `where`; a pure-range query is Solr
+        # `q=*:* fq=range`. Clauses on unknown fields stay query text.
+        rest, rng = parse_range_clauses(query, words.get_config().meta_cols)
+        if rng is not None:
+            query = rest or "*:*"
+            where = rng if where is None else f"({where}) AND ({rng})"
+    options = {
+        "where": where, "after": after, "group_by": group_by, "boosts": boosts,
+        "tie": tie, "synonyms": synonyms, "sort_by": sort_by,
+        "recency_boost": recency_boost, "min_should_match": min_should_match or None,
+        "pinned": pinned, "unordered_phrases": unordered_phrases or None,
+        "boost_fn": boost_fn, "rescore": rescore, "vector": vector,
+        "phrase_prefix": phrase_prefix or None,
+    }
+    given = [name for name, value in options.items() if value is not None]
     kind = route(query)
-    if unordered_phrases and kind != "boolean":
-        # phrases only exist on the boolean route; raise instead of
-        # silently ignoring the semantics request
-        raise ValueError(
-            f"unordered_phrases only applies to phrase-carrying boolean "
-            f"queries (query routed to {kind!r})"
+    handler = next(h for h in _ROUTES if h == kind or h in given)
+    composes, message = _ROUTES[handler]
+    bad = [o for o in given if o != handler and o not in composes]
+    if bad:
+        raise ValueError(message.format("/".join(bad)))
+
+    if handler == "phrase_prefix":
+        return phrase_prefix_topk(spark, words, query, k, max_expansions=max_expansions)
+    if handler == "match_all":
+        return match_all_docs(
+            spark, words, k, where=where, after=after,
+            sort_by=sort_by, sort_ascending=sort_ascending,
         )
-    if min_should_match and kind not in ("bm25", "boolean"):
-        # checked before the multi-term/formula routes dispatch so the
-        # constraint is never silently dropped
-        raise ValueError(
-            f"min_should_match only supported on the bm25/boolean "
-            f"routes (query routed to {kind!r})"
-        )
-    if tie is not None and boosts is None:
-        # checked early so no other shaping branch can silently drop it
-        raise ValueError("tie (edismax dismax combiner) requires fielded boosts")
-    if vector is not None:
-        # hybrid lexical+vector retrieval (ES 8.8 `rrf` retriever):
-        # block-max-WAND BM25 leg + IVF ANN leg for `vector`, fused by
-        # Reciprocal Rank Fusion — plans/hybrid.hybrid_topk. Only the
-        # plain BM25 route carries a vector leg; shaping options do not
-        # compose (each would need its own fusion contract) and are
-        # rejected rather than silently dropped.
+    if handler == "formula":
+        return _formula_search(spark, stores, query, k, searcher)
+    if handler == "vector":
         if stores.vectors is None:
             raise ValueError("vector search needs SearchStores.vectors (an ANN store)")
-        if kind != "bm25":
-            raise ValueError(
-                f"vector= only composes with plain BM25 queries "
-                f"(query routed to {kind!r})"
-            )
-        bad = [
-            n
-            for n, on in (
-                ("after", after is not None),
-                ("group_by", group_by is not None),
-                ("boosts", boosts is not None),
-                ("synonyms", synonyms is not None),
-                ("sort_by", sort_by is not None),
-                ("recency_boost", recency_boost is not None),
-                ("pinned", pinned is not None),
-                ("boost_fn", boost_fn is not None),
-                ("rescore", rescore is not None),
-                ("min_should_match", bool(min_should_match)),
-            )
-            if on
-        ]
-        if bad:
-            raise ValueError(f"{'/'.join(bad)} not supported with vector search")
-        from tangent_spark.plans.hybrid import hybrid_topk
-
         return hybrid_topk(
-            spark, stores.words, stores.vectors, query, vector, k=k,
+            spark, words, stores.vectors, query, vector, k=k,
             n_per_leg=n_per_leg, rrf_k=rrf_k, n_probe=n_probe,
             searcher=searcher, where=where,
         )
-    if kind == "match_all":
-        # Solr q=*:* (Lucene MatchAllDocsQuery): every live doc,
-        # constant score — composes with `where`, `after` OR `sort_by`;
-        # relevance-shaping options are meaningless here and rejected
-        bad = [
-            n
-            for n, on in (
-                ("group_by", group_by is not None),
-                ("boosts", boosts is not None),
-                ("synonyms", synonyms is not None),
-                ("recency_boost", recency_boost is not None),
-                ("pinned", pinned is not None),
-            )
-            if on
-        ]
-        if bad:
+    if handler == "pinned":
+        return elevated_topk(spark, words, query, k, pinned)
+    if handler == "sort_by":
+        return sorted_topk(spark, words, query, sort_by, k=k, ascending=sort_ascending)
+    if handler == "rescore":
+        unknown = sorted(set(rescore) - _RESCORE_KEYS)
+        if unknown:
             raise ValueError(
-                f"{'/'.join(bad)} not supported with the match-all query"
+                f"unknown rescore option(s) {unknown}; allowed: {sorted(_RESCORE_KEYS)}"
             )
-        from tangent_spark.plans.search import match_all_docs
-
-        return match_all_docs(
-            spark, stores.words, k, where=where, after=after,
-            sort_by=sort_by, sort_ascending=sort_ascending,
-        )
-    shaping = [
-        name
-        for name, on in (
-            ("after", after is not None),
-            ("group_by", group_by is not None),
-            ("boosts", boosts is not None),
-            ("synonyms", synonyms is not None),
-            ("sort_by", sort_by is not None),
-            ("recency_boost", recency_boost is not None),
-            ("pinned", pinned is not None),
-            ("boost_fn", boost_fn is not None),
-            ("rescore", rescore is not None),
-        )
-        if on
-    ]
-    if shaping and (
-        kind not in ("bm25", "wildcard", "fuzzy", "regexp")
-        or where is not None
+        return _serve(searcher, "rescore", phrase_rescore_topk, spark, words, query, k,
+                      **rescore)
+    if handler == "recency_boost":
+        return boosted_topk(spark, words, query, k, after=after, **recency_boost)
+    if handler == "boost_fn":
+        return function_boosted_topk(spark, words, query, k, boost_fn, after=after)
+    if handler == "boosts":
+        # Lucene classic-QueryParser field scoping (`title:spark body:x`)
+        # and/or the Solr edismax tie combiner need the field-query plan
+        fields = words.get_config().fields
+        if tie is not None or any(re.search(rf"(?:^|\s){f}:", query) for f in fields):
+            return field_query_topk(spark, words, query, k, boosts, tie=tie, after=after)
+        return fielded_topk(spark, words, query, k, boosts, after=after)
+    if handler == "synonyms":
+        return bm25_topk_synonyms(spark, words, query, k, synonyms, after=after)
+    if handler == "group_by":
+        return grouped_topk(spark, words, query, group_by, k=k, group_limit=group_limit)
+    if handler == "regexp" and any(
+        is_fuzzy_token(t) or _WILD.search(t)
+        for t in query.split() if not is_regexp_token(t)
     ):
+        # a fuzzy/wildcard token beside a /.../ token would be analyzed
+        # away (Lucene keeps them separate token queries)
         raise ValueError(
-            f"{'/'.join(shaping)} only supported on the plain BM25 route "
-            f"(query routed to {kind!r}"
-            + (", with a metadata filter)" if where is not None else ")")
+            "fuzzy/wildcard terms cannot be combined with regexp terms in one query"
         )
-    if kind == "regexp":
-        # same contract as the other multi-term routes: cursor paging
-        # composes; other shaping, metadata filters, and mixing with
-        # fuzzy/wildcard tokens outside the /.../ bodies are rejected
-        # rather than silently analyzed away
-        from tangent_spark.plans.fuzzy import is_fuzzy_token
-        from tangent_spark.plans.wildcard import is_regexp_token
+    if handler == "fuzzy" and _WILD.search(query):
+        raise ValueError("wildcard and fuzzy terms cannot be combined in one query")
+    if handler in ("regexp", "fuzzy", "wildcard"):
+        plan = {"regexp": regexp_topk, "fuzzy": fuzzy_topk, "wildcard": wildcard_topk}
+        return _serve(searcher, kind, plan[kind], spark, words, query, k, after=after)
 
-        if shaping and shaping != ["after"]:
-            raise ValueError(
-                f"{'/'.join(shaping)} not supported with regexp terms"
-            )
-        if where is not None:
-            raise ValueError(
-                "metadata filters are not supported with regexp terms"
-            )
-        rest = [t for t in query.split() if not is_regexp_token(t)]
-        if any(is_fuzzy_token(t) for t in rest) or any(
-            _WILD.search(t) for t in rest
+    # the plain route: bm25 or boolean, optionally filtered or with mm
+    if kind == "boolean":
+        # a bare (unquoted) wildcard/fuzzy/regexp token inside boolean
+        # syntax would silently tokenize (`qu*ry` -> qu/ry, `querry~1`
+        # -> querry1); quoted phrases and their `~N` slop are exempt
+        bare = [t.lstrip("+-") for t in re.sub(r'"[^"]*"(~\d+)?', " ", query).split()]
+        for name, is_term in (
+            ("wildcard", _WILD.search),
+            ("fuzzy", is_fuzzy_token),
+            ("regexp", is_regexp_token),
         ):
-            raise ValueError(
-                "fuzzy/wildcard terms cannot be combined with regexp "
-                "terms in one query"
-            )
-        if searcher is not None:
-            return searcher.regexp(query, k, after=after)
-        from tangent_spark.plans.wildcard import regexp_topk
-
-        return regexp_topk(spark, stores.words, query, k, after=after)
-    if kind == "fuzzy":
-        # cursor paging composes (the expanded disjunction serves
-        # through the same kernel); the other shaping options and
-        # metadata filters do not expand fuzzy targets yet — raise
-        # rather than silently scoring `querry~1` as the literal
-        # token `querry1`. A wildcard/fuzzy mix in one query is also
-        # rejected (Lucene keeps them as separate token queries; the
-        # literal remainder here goes through the analyzer, which
-        # would shred a bare `dat*` into `dat`).
-        if shaping and shaping != ["after"]:
-            raise ValueError(
-                f"{'/'.join(shaping)} not supported with fuzzy terms"
-            )
-        if where is not None:
-            raise ValueError(
-                "metadata filters are not supported with fuzzy terms"
-            )
-        if _WILD.search(query):
-            raise ValueError(
-                "wildcard and fuzzy terms cannot be combined in one query"
-            )
-        if searcher is not None:
-            return searcher.fuzzy(query, k, after=after)
-        from tangent_spark.plans.fuzzy import fuzzy_topk
-
-        return fuzzy_topk(spark, stores.words, query, k, after=after)
-    if kind == "wildcard":
-        # cursor paging composes (the expanded disjunction serves
-        # through the same kernel); the other shaping options and
-        # metadata filters do not expand patterns yet — raise rather
-        # than silently treating `qu*ry` as the literal tokens qu/ry
-        if shaping and shaping != ["after"]:
-            raise ValueError(
-                f"{'/'.join(shaping)} not supported with wildcard terms"
-            )
-        if where is not None:
-            raise ValueError(
-                "metadata filters are not supported with wildcard terms"
-            )
-        if searcher is not None:
-            return searcher.wildcard(query, k, after=after)
-        from tangent_spark.plans.wildcard import wildcard_topk
-
-        return wildcard_topk(spark, stores.words, query, k, after=after)
-    if kind == "boolean" and _WILD.search(re.sub(r'"[^"]*"', " ", query)):
-        # a bare (unquoted) wildcard token inside boolean syntax would
-        # silently tokenize `qu*ry` -> qu/ry; reject it explicitly
-        # (quoted phrases keep their punctuation — `"how?"` is fine).
-        # Checked before the `where` branch too: filtered_topk serves
-        # boolean-routed queries and has the same tokenizer.
-        raise ValueError(
-            "wildcard terms inside boolean queries are not supported"
-        )
-    if kind == "boolean":
-        # likewise a bare fuzzy token (`querry~1`) inside boolean
-        # syntax would silently tokenize to `querry1`; phrases keep
-        # their slop suffix (`"a b"~2` is proximity syntax, stripped
-        # with its quotes before the check)
-        from tangent_spark.plans.fuzzy import is_fuzzy_token
-
-        stripped = re.sub(r'"[^"]*"(~\d+)?', " ", query)
-        if any(is_fuzzy_token(t.lstrip("+-")) for t in stripped.split()):
-            raise ValueError(
-                "fuzzy terms inside boolean queries are not supported"
-            )
-        from tangent_spark.plans.wildcard import is_regexp_token
-
-        if any(is_regexp_token(t.lstrip("+-")) for t in stripped.split()):
-            raise ValueError(
-                "regexp terms inside boolean queries are not supported"
-            )
-    if min_should_match:
-        # Solr mm: serves the bm25/boolean routes (the boolean grammar
-        # is a superset of plain BM25 — a bare query is all-should),
-        # composes with `where`, rejects everything else explicitly
-        if shaping:
-            raise ValueError(
-                f"min_should_match is not combinable with {'/'.join(shaping)}"
-            )
-        if kind == "bm25":
-            from tangent_spark.plans.search import query_terms
-
-            if not query_terms(query, stores.words.get_config().tokenizer):
-                return spark.createDataFrame([], "doc_id long, score double")
-        if where is not None:
-            if searcher is not None:
-                return searcher.filtered(
-                    query, k, where, min_should_match=min_should_match,
-                    unordered_phrases=unordered_phrases,
-                )
-            from tangent_spark.plans.boolean import filtered_topk
-
-            return filtered_topk(
-                spark, stores.words, query, k, where,
-                min_should_match=min_should_match,
-                unordered_phrases=unordered_phrases,
-            )
-        if searcher is not None:
-            return searcher.boolean(
-                query, k, min_should_match=min_should_match,
-                unordered_phrases=unordered_phrases,
-            )
-        from tangent_spark.plans.boolean import boolean_topk
-
-        return boolean_topk(
-            spark, stores.words, query, k, min_should_match=min_should_match,
-            unordered_phrases=unordered_phrases,
-        )
-    if pinned is not None:
-        if shaping != ["pinned"]:
-            raise ValueError(
-                "pinned elevation combines with no other shaping option"
-            )
-        from tangent_spark.plans.search import elevated_topk
-
-        return elevated_topk(spark, stores.words, query, k, pinned)
-    if sort_by is not None:
-        if group_by is not None or boosts is not None or synonyms is not None \
-                or after is not None or recency_boost is not None \
-                or pinned is not None or boost_fn is not None:
-            raise ValueError("sort_by is not combinable with other shaping options")
-        from tangent_spark.plans.sortby import sorted_topk
-
-        return sorted_topk(
-            spark, stores.words, query, sort_by, k=k, ascending=sort_ascending
-        )
-    if rescore is not None:
-        if shaping != ["rescore"]:
-            raise ValueError("rescore combines with no other shaping option")
-        if kind != "bm25":
-            raise ValueError(
-                f"rescore only supported on the plain BM25 route "
-                f"(query routed to {kind!r})"
-            )
-        allowed = {"weight", "window", "slop", "in_order", "phrase"}
-        bad_keys = sorted(set(rescore) - allowed)
-        if bad_keys:
-            raise ValueError(
-                f"unknown rescore option(s) {bad_keys}; allowed: {sorted(allowed)}"
-            )
-        if searcher is not None:
-            return searcher.rescore(query, k, **rescore)
-        from tangent_spark.plans.rescore import phrase_rescore_topk
-
-        return phrase_rescore_topk(spark, stores.words, query, k, **rescore)
-    if recency_boost is not None:
-        if group_by is not None or boosts is not None or synonyms is not None \
-                or boost_fn is not None:
-            raise ValueError(
-                "recency_boost combines only with `after` (cursor paging)"
-            )
-        from tangent_spark.plans.search import boosted_topk
-
-        return boosted_topk(
-            spark, stores.words, query, k, after=after, **recency_boost
-        )
-    if boost_fn is not None:
-        if group_by is not None or boosts is not None or synonyms is not None:
-            raise ValueError(
-                "boost_fn combines only with `after` (cursor paging)"
-            )
-        from tangent_spark.plans.search import function_boosted_topk
-
-        return function_boosted_topk(
-            spark, stores.words, query, k, boost_fn, after=after
-        )
-    if boosts is not None:
-        if group_by is not None or synonyms is not None:
-            raise ValueError(
-                "group_by/synonyms are not supported with fielded boosts"
-            )
-        cfg = stores.words.get_config()
-        fielded_fields = getattr(cfg, "fields", None) or ()
-        has_field_prefix = any(
-            re.search(rf"(?:^|\s){f}:", query) for f in fielded_fields
-        )
-        if tie is not None or has_field_prefix:
-            # Lucene classic-QueryParser field scoping and/or the Solr
-            # edismax tie combiner: `title:spark body:proof^2 data`
-            # with qf=boosts — scoped clauses are single boosted
-            # TermQueries, bare clauses expand over qf (summed, or
-            # DisjunctionMaxQuery max + tie x rest when tie is set)
-            from tangent_spark.plans.fielded import field_query_topk
-
-            return field_query_topk(
-                spark, stores.words, query, k, boosts, tie=tie, after=after
-            )
-        from tangent_spark.plans.fielded import fielded_topk
-
-        return fielded_topk(spark, stores.words, query, k, boosts, after=after)
-    if synonyms is not None:
-        if group_by is not None:
-            raise ValueError("group_by is not supported with synonyms")
-        from tangent_spark.plans.search import bm25_topk_synonyms
-
-        return bm25_topk_synonyms(
-            spark, stores.words, query, k, synonyms, after=after
-        )
-    if group_by is not None:
-        if after is not None:
-            raise ValueError("cursor paging is not supported with grouping")
-        from tangent_spark.plans.group import grouped_topk
-
-        return grouped_topk(
-            spark, stores.words, query, group_by, k=k, group_limit=group_limit
-        )
-    if after is not None:
-        if searcher is not None:
-            return searcher.topk(query, k, after=after)
-        from tangent_spark.plans.search import bm25_topk_wand
-
-        return bm25_topk_wand(spark, stores.words, query, k, after=after)
-    if kind == "formula":
-        if where is not None:
-            raise ValueError("metadata filters are not supported on the formula route")
-        return _formula_search(spark, stores, query, k, searcher)
+            if any(is_term(t) for t in bare):
+                raise ValueError(f"{name} terms inside boolean queries are not supported")
+    elif (where is not None or min_should_match) and not query_terms(
+        query, words.get_config().tokenizer
+    ):
+        # an un-tokenizable plain query returns empty like the bm25
+        # route, not the boolean parser's no-positive-clause error
+        return spark.createDataFrame([], "doc_id long, score double")
+    grammar = {"min_should_match": min_should_match,
+               "unordered_phrases": unordered_phrases}
     if where is not None:
-        # filtered_topk serves the full grammar, so it covers both the
-        # boolean and plain-BM25 routes. Mirror the unfiltered bm25
-        # route's contract for un-tokenizable plain queries (empty
-        # result, not the boolean parser's no-positive-clause error —
-        # a punctuation-only search box with a filter is not a bug).
-        if kind == "bm25":
-            from tangent_spark.plans.search import query_terms
+        return _serve(searcher, "filtered", filtered_topk, spark, words, query, k,
+                      where, **grammar)
+    if kind == "boolean" or min_should_match:
+        return _serve(searcher, "boolean", boolean_topk, spark, words, query, k,
+                      **grammar)
+    return _serve(searcher, "topk", bm25_topk_wand, spark, words, query, k, after=after)
 
-            if not query_terms(query, stores.words.get_config().tokenizer):
-                return spark.createDataFrame([], "doc_id long, score double")
-        if searcher is not None:
-            return searcher.filtered(
-                query, k, where, unordered_phrases=unordered_phrases
-            )
-        from tangent_spark.plans.boolean import filtered_topk
 
-        return filtered_topk(
-            spark, stores.words, query, k, where,
-            unordered_phrases=unordered_phrases,
-        )
-    if kind == "boolean":
-        if searcher is not None:
-            return searcher.boolean(query, k, unordered_phrases=unordered_phrases)
-        from tangent_spark.plans.boolean import boolean_topk
-
-        return boolean_topk(
-            spark, stores.words, query, k, unordered_phrases=unordered_phrases
-        )
+def _serve(searcher, method: str, plan, spark, store, query, k, *args, **kwargs):
+    """The warm/cold fork: a resident Searcher serves through its
+    `method`; without one the one-shot `plan` function reads `store`."""
     if searcher is not None:
-        return searcher.topk(query, k)
-    from tangent_spark.plans.search import bm25_topk_wand
-
-    return bm25_topk_wand(spark, stores.words, query, k)
+        return getattr(searcher, method)(query, k, *args, **kwargs)
+    return plan(spark, store, query, k, *args, **kwargs)
 
 
 def _formula_search(
@@ -649,12 +395,6 @@ def _formula_search(
     k: int,
     searcher=None,
 ) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from tangent_spark.plans.formula import dice_topk_docs
-    from tangent_spark.plans.rerank import combine_math_text
-    from tangent_spark.plans.search import bm25_topk_wand, query_terms
-
     if stores.formulas is None:
         raise ValueError("query contains MathML but no formula store was given")
     mathml = _MATH_BLOCK.findall(query)
@@ -699,10 +439,8 @@ def _formula_search(
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
-    text_scores = (
-        searcher.topk(text_rest, k)
-        if searcher is not None
-        else bm25_topk_wand(spark, stores.words, text_rest, k)
+    text_scores = _serve(
+        searcher, "topk", bm25_topk_wand, spark, stores.words, text_rest, k
     )
     combined = combine_math_text(
         math_scores, text_scores, n_exprs=len(mathml), n_keywords=len(kw)

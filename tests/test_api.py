@@ -21,6 +21,13 @@ def test_route():
     assert route("a-b range") == "bm25"  # infix dash is not an operator
     assert route("<math><mi>x</mi></math>") == "formula"
     assert route('<mws:qvar name="a"/>') == "formula"
+    assert route("*:*") == "match_all"
+    assert route("/que.y/") == "regexp"
+    assert route("querry~1") == "fuzzy"
+    assert route("te*t") == "wildcard"
+    assert route("+a /b.c/") == "boolean"
+    assert route("<math><mi>x</mi><mo>*</mo><mi>y</mi></math>") == "formula"
+    assert route("<math><mi>a</mi><mo>~</mo><mi>b</mi></math> near~1") == "formula"
 
 
 @pytest.fixture(scope="module")

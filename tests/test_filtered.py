@@ -274,6 +274,16 @@ def test_match_all_via_front_door(spark, store, pages):
         match_all_docs(spark, store, 5, after=(1.0, 3), sort_by="lang")
     with pytest.raises(ValueError, match="min_should_match"):
         search(spark, store, "*:*", k=5, min_should_match=1)
+    # relevance shaping has nothing to act on under constant scores:
+    # rejected, not silently dropped (also for a pure-range query)
+    with pytest.raises(ValueError, match="boost_fn"):
+        search(spark, store, "*:*", k=5, boost_fn="1.0 + 0.1 * ln(n_chars)")
+    with pytest.raises(ValueError, match="rescore"):
+        search(spark, store, "*:*", k=5, rescore={"weight": 1.0})
+    with pytest.raises(ValueError, match="boost_fn"):
+        search(spark, store, "lang:[a TO z]", k=5, boost_fn="1.0")
+    with pytest.raises(ValueError, match="rescore"):
+        search(spark, store, "lang:[a TO z]", k=5, rescore={"weight": 1.0})
 
 
 def test_match_all_respects_tombstones(spark, pages, tmp_path_factory):

@@ -248,6 +248,10 @@ def test_api_route(spark, store, corpus):
         )
     with pytest.raises(ValueError, match="not supported with wildcard"):
         search(spark, store, "dat* query", 10, rescore={"weight": 1.0})
+    with pytest.raises(ValueError, match="rescore"):
+        search(spark, store, query, 10, rescore={"weight": 1.0}, sort_by="lang")
+    with pytest.raises(ValueError, match="rescore"):
+        search(spark, store, "*:*", 10, rescore={"weight": 1.0})
 
 
 def test_rescore_respects_deletes(spark, corpus, tmp_path_factory):
