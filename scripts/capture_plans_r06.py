@@ -6,7 +6,8 @@ plans/r06/ (the judge checks plan claims against these files).
 entry_queries / dedup modules checked out from git to /tmp, the old
 warm task sizing reproduced via TANGENT_QUERY_TASK_ROWS=1 (which
 restores query_tasks = min(n_shards, defaultParallelism)), and the old
-cold path reproduced via _wand_plan's still-present scalar branch.
+cold path reproduced by running the BM25 plan builder over a source of
+fresh parquet reads with the corpus stats passed as scalars.
 """
 
 from __future__ import annotations
@@ -84,14 +85,19 @@ def main() -> None:
          new_dd._small_star(new_dd._large_star(e), oriented=True))
 
     # warm topk: old fixed task wave vs cache-adaptive task wave;
-    # cold WAND: a hand-built _wand_plan vs bm25_topk_wand (which now
-    # passes the store's memoized corpus stats as literals too)
+    # cold WAND: the plan builder over fresh reads vs bm25_topk_wand
+    # (which passes the store's memoized corpus stats as literals too)
     import shutil
     import tempfile
 
     from tangent_spark.config import IndexConfig
     from tangent_spark.plans.indexer import build_index
-    from tangent_spark.plans.search import Searcher, _wand_plan, bm25_topk_wand
+    from tangent_spark.plans.search import (
+        ScoreSpec,
+        Searcher,
+        _bm25_plan,
+        bm25_topk_wand,
+    )
 
     docs = spark.read.parquet(f"{sf}/documents.parquet").select(
         "doc_id", "text", "lang"
@@ -129,14 +135,15 @@ def main() -> None:
     cs = spark.read.parquet(store.path("corpus_stats")).collect()[0]
     from tangent_spark.plans.search import query_terms
 
-    save("cold_wand", "before", _wand_plan(
-        spark.read.parquet(store.path("postings")),
-        spark.read.parquet(store.path("term_stats")),
-        query_terms(q, cfg.tokenizer),
-        int(cs["n_docs"]),
-        float(cs["avgdl"]) if cs["avgdl"] else 1.0,
-        cfg, 10, False,
-    ))
+    source = dict(
+        postings=spark.read.parquet(store.path("postings")),
+        term_stats=spark.read.parquet(store.path("term_stats")),
+        n_docs=int(cs["n_docs"]),
+        avgdl=float(cs["avgdl"]) if cs["avgdl"] else 1.0,
+        deleted=None,
+    )
+    spec = ScoreSpec(tuple(query_terms(q, cfg.tokenizer)), 10)
+    save("cold_wand", "before", _bm25_plan(source, spec, cfg))
     save("cold_wand", "after", bm25_topk_wand(spark, store, q, 10))
     shutil.rmtree(os.path.dirname(idx), ignore_errors=True)
 

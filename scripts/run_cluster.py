@@ -38,6 +38,8 @@ sys.path.insert(0, _REPO)
 
 import pyspark  # noqa: E402
 
+from tangent_spark.session import default_driver_memory  # noqa: E402
+
 SPARK_HOME = os.path.dirname(os.path.abspath(pyspark.__file__))
 MASTER_URL = "spark://127.0.0.1:7077"
 PAGES = os.environ.get("SCALING_PAGES", "/tmp/scaling_v4/pages")
@@ -45,6 +47,17 @@ WORK_PARENT = os.environ.get("CLUSTER_WORK_DIR")  # None: the system temp dir
 LEVELS = tuple(int(x) for x in os.environ.get("CLUSTER_LEVELS", "2,8").split(","))
 N_WORKERS = max(LEVELS)  # 1-core executors: one worker JVM per core of the widest level
 REPEATS = int(os.environ.get("CLUSTER_REPEATS", "2"))
+BRINGUP_S = 120  # one deadline for the master and every started worker
+
+
+def memory_plan(n_workers: int) -> tuple[str, str]:
+    """(driver heap, heap of each worker and of its executor): the
+    driver takes session.default_driver_memory() — 40% of MemTotal,
+    capped at 48g — and the workers split the same share, so the JVMs
+    one run starts fit the host together."""
+    driver = default_driver_memory()
+    share_mb = int(driver.rstrip("m"))
+    return driver, f"{max(share_mb // n_workers, 512)}m"
 
 
 def _spawn(args, log):
@@ -68,43 +81,68 @@ def stop(procs: list[subprocess.Popen]) -> None:
             p.wait()
 
 
+def _await_line(proc: subprocess.Popen, log: str, marker: str, deadline: float) -> None:
+    """Return once `log` holds `marker`; raise if `proc` exits first or
+    the deadline passes."""
+    while True:
+        with open(log, errors="replace") as f:
+            if marker in f.read():
+                return
+        if time.monotonic() > deadline:
+            raise RuntimeError(f"cluster bring-up timed out: no {marker!r} in {log}")
+        try:
+            proc.wait(timeout=0.2)
+        except subprocess.TimeoutExpired:
+            continue
+        raise RuntimeError(f"{log}: process exited before logging {marker!r}")
+
+
 def ensure_cluster(work: str, procs: list[subprocess.Popen]) -> None:
     """Start whatever part of the cluster is not running yet, appending
-    each started process to `procs`."""
+    each started process to `procs`, and wait until the started master
+    is ALIVE and every started worker has registered with the master."""
     def up(pattern):
         return subprocess.run(
             ["pgrep", "-fc", pattern], capture_output=True, text=True
         ).stdout.strip() not in ("", "0")
 
     cls = os.path.join(SPARK_HOME, "bin", "spark-class")
+    deadline = time.monotonic() + BRINGUP_S
     if not up("deploy.master.Master"):
+        log = os.path.join(work, "master.log")
         procs.append(_spawn(
             [cls, "org.apache.spark.deploy.master.Master",
              "--host", "127.0.0.1", "--port", "7077", "--webui-port", "8080"],
-            os.path.join(work, "master.log"),
+            log,
         ))
-        time.sleep(10)
+        _await_line(procs[-1], log, "New state: ALIVE", deadline)
+    _, worker_mem = memory_plan(N_WORKERS)
+    started = []
     n_workers = int(
         subprocess.run(["pgrep", "-fc", "deploy.worker.Worker"],
                        capture_output=True, text=True).stdout.strip() or "0"
     )
     for i in range(n_workers, N_WORKERS):
+        log = os.path.join(work, f"worker_{i}.log")
         procs.append(_spawn(
             [cls, "org.apache.spark.deploy.worker.Worker", MASTER_URL,
-             "--cores", "1", "--memory", "12g", "--port", "0",
+             "--cores", "1", "--memory", worker_mem, "--port", "0",
              "--webui-port", str(8200 + i),
              "--work-dir", os.path.join(work, f"w{i}")],
-            os.path.join(work, f"worker_{i}.log"),
+            log,
         ))
-    time.sleep(15)
+        started.append((procs[-1], log))
+    for proc, log in started:
+        _await_line(proc, log, "Successfully registered with master", deadline)
 
 
 def submit(cores: int, work: str, out: str) -> None:
+    driver_mem, executor_mem = memory_plan(N_WORKERS)
     env = dict(os.environ)
     env.update(
         SPARK_GRAFT_MASTER=MASTER_URL,
         SPARK_GRAFT_EXECUTOR_CORES="1",
-        SPARK_GRAFT_EXECUTOR_MEM="6g",
+        SPARK_GRAFT_EXECUTOR_MEM=executor_mem,
     )
     zip_path = os.path.join(work, "tangent_spark.zip")
     subprocess.run(
@@ -112,7 +150,7 @@ def submit(cores: int, work: str, out: str) -> None:
     )
     subprocess.run(
         [os.path.join(SPARK_HOME, "bin", "spark-submit"),
-         "--master", MASTER_URL, "--driver-memory", "16g",
+         "--master", MASTER_URL, "--driver-memory", driver_mem,
          "--py-files", zip_path,
          os.path.join(_REPO, "scripts", "scaling_bench.py"),
          "--cpus", str(cores), "--pages", PAGES, "--out", out],

@@ -167,13 +167,7 @@ def fielded_topk(
 
     ``tie`` switches the cross-field combiner from BooleanQuery-sum to
     DisjunctionMaxQuery (use dismax_topk for the named surface)."""
-    from tangent_spark.plans.search import (
-        _WAND_SCHEMA,
-        _cursor,
-        _score_shard,
-        load_deleted_ids,
-        query_terms,
-    )
+    from tangent_spark.plans.search import query_terms
 
     cfg = store.get_config()
     unknown = set(boosts) - set(cfg.fields)
@@ -184,78 +178,34 @@ def fielded_topk(
     qts = query_terms(query, cfg.tokenizer)
     if not qts or not boosts:
         return spark.createDataFrame([], "doc_id long, score double")
-
-    if tie is not None and not (0.0 <= tie <= 1.0):
-        raise ValueError(f"tie must be in [0, 1], got {tie}")
-    if tie is not None and any(b <= 0 for b in boosts.values()):
-        # the kernel's per-group max over zero-initialized buckets (and
-        # the block-max bound's sum >= dismax argument) both need
-        # non-negative contributions
-        raise ValueError("dismax requires strictly positive field boosts")
-    prefixed = [f"{f}{FIELD_SEP}{t}" for f in sorted(boosts) for t in qts]
-    bdf = spark.createDataFrame(
-        sorted((f, float(b)) for f, b in boosts.items()),
-        "field string, boost double",
-    )
-    # per-(field, term) boosted idf + per-field avgdl, all JVM-side on
-    # vocabulary-scale tables filtered to <= |q| x |fields| rows, then
-    # broadcast into the postings scan
-    cols = [
-        "term",
-        (
-            F.col("boost")
-            * F.log(
-                F.lit(1.0)
-                + (F.col("n_docs").cast("double") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5)
-            )
-        ).alias("idf"),
-        "avgdl",
-    ]
-    if tie is not None:
-        # dismax group id = index of the base query term: the group's
-        # members are that term's per-field TermQueries
-        gids = {t: i for i, t in enumerate(dict.fromkeys(qts))}
-        gmap = F.create_map(
-            *[F.lit(x) for t, i in gids.items() for x in (t, i)]
-        )
-        cols.append(
-            gmap[
-                F.expr(f"substring(term, instr(term, '{FIELD_SEP}') + 1)")
-            ].cast("long").alias("dmax")
-        )
-    qstats = (
-        store.read(spark, "term_stats")
-        .filter(F.col("term").isin(prefixed))
-        .withColumn("field", F.substring_index("term", FIELD_SEP, 1))
-        .join(F.broadcast(store.read(spark, "field_stats")), "field")
-        .join(F.broadcast(bdf), "field")
-        .select(*cols)
-    )
-    kern = _score_shard(
-        1.0,  # unused: every row carries its field's avgdl
-        cfg,
-        k,
-        deleted=load_deleted_ids(spark, store),
-        after=_cursor(after),
-        dismax_tie=float(tie) if tie is not None else None,
+    # dismax group id = index of the base query term: the group's
+    # members are that term's per-field TermQueries
+    return _fielded_plan(
+        spark, store, cfg, k,
+        {(f"{f}{FIELD_SEP}{t}", g): b for f, b in boosts.items()
+         for g, t in enumerate(qts)},
+        after, tie,
     )
 
-    def apply_kern(pdf):
-        return kern(pdf)
 
-    local = (
-        store.read(spark, "postings")
-        .filter(F.col("term").isin(prefixed))
-        .join(F.broadcast(qstats), "term")
-        .groupBy("shard")
-        .applyInPandas(apply_kern, schema=_WAND_SCHEMA)
+def _fielded_plan(spark, store, cfg, k, clauses, after, tie):
+    """The fielded routes' one BM25 plan: `clauses` ({(field:term,
+    dismax group): boost}) become the ScoreSpec's clause rows, served
+    off the cold source plus the per-field stats (docCount idf, avgdl)
+    — all joined JVM-side on vocabulary-scale tables filtered to the
+    <= |q| x |fields| clause terms, then broadcast into the postings
+    scan."""
+    from tangent_spark.plans.search import ScoreSpec, _bm25_plan, _cold_sources
+
+    spec = ScoreSpec(
+        tuple(sorted({t for t, _ in clauses})), k,
+        clauses=tuple(sorted((t, g, b) for (t, g), b in clauses.items())),
+        tie=tie, after=after,
     )
-    return (
-        local.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+    source = dict(
+        _cold_sources(spark, store), field_stats=store.read(spark, "field_stats")
     )
+    return _bm25_plan(source, spec, cfg)
 
 
 def dismax_topk(
@@ -355,23 +305,14 @@ def field_query_topk(
     rows) joins term_stats + field_stats JVM-side for boosted idf /
     per-field avgdl / dismax group, broadcasts into the pruned
     postings scan, ONE single-stage kernel job."""
-    from tangent_spark.plans.search import _WAND_SCHEMA, _score_shard, load_deleted_ids
-
     cfg = store.get_config()
     unknown = set(qf) - set(cfg.fields)
     if unknown:
         raise ValueError(f"unknown fields {sorted(unknown)}; index has {cfg.fields}")
-    if tie is not None and not (0.0 <= tie <= 1.0):
-        raise ValueError(f"tie must be in [0, 1], got {tie}")
     clauses = parse_field_query(query, cfg.fields, cfg.tokenizer)
     if not clauses or not qf:
         return spark.createDataFrame([], "doc_id long, score double")
-    if any(b <= 0 for b in qf.values()) or any(b <= 0 for _, _, b in clauses):
-        # negative boosts would break the block-max upper bound (sum
-        # path) and the zero-initialized group max (dismax path) alike
-        raise ValueError("field query boosts must be strictly positive")
-
-    # expand to (prefixed term, boost, group); group = clause ordinal
+    # expand to (prefixed term, group) -> boost; group = clause ordinal
     # so a bare term's per-field expansions dismax together while
     # field-scoped clauses are singleton groups (max == the score)
     rows: dict[tuple[str, int], float] = {}
@@ -383,51 +324,4 @@ def field_query_topk(
             for t in toks:
                 key = (f"{f}{FIELD_SEP}{t}", gid)
                 rows[key] = rows.get(key, 0.0) + b
-    cdf = spark.createDataFrame(
-        sorted((t, g, b) for (t, g), b in rows.items()),
-        "term string, dmax long, boost double",
-    )
-    stats_cols = [
-        "term",
-        (
-            F.col("boost")
-            * F.log(
-                F.lit(1.0)
-                + (F.col("n_docs").cast("double") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5)
-            )
-        ).alias("idf"),
-        "avgdl",
-    ] + ([F.col("dmax")] if tie is not None else [])
-    qstats = (
-        store.read(spark, "term_stats")
-        .join(F.broadcast(cdf), "term")
-        .withColumn("field", F.substring_index("term", FIELD_SEP, 1))
-        .join(F.broadcast(store.read(spark, "field_stats")), "field")
-        .select(*stats_cols)
-    )
-    kern = _score_shard(
-        1.0,  # unused: every row carries its field's avgdl
-        cfg,
-        k,
-        deleted=load_deleted_ids(spark, store),
-        after=(float(after[0]), int(after[1])) if after is not None else None,
-        dismax_tie=float(tie) if tie is not None else None,
-    )
-
-    def apply_kern(pdf):
-        return kern(pdf)
-
-    prefixed = sorted({t for t, _ in rows})
-    local = (
-        store.read(spark, "postings")
-        .filter(F.col("term").isin(prefixed))
-        .join(F.broadcast(qstats), "term")
-        .groupBy("shard")
-        .applyInPandas(apply_kern, schema=_WAND_SCHEMA)
-    )
-    return (
-        local.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _fielded_plan(spark, store, cfg, k, rows, after, tie)

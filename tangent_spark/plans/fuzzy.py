@@ -215,16 +215,12 @@ def fuzzy_topk(
     then the standard ONE-job block-max WAND plan (deleted docs masked,
     searchAfter paging supported — the expanded query is an ordinary
     disjunction from the kernel's point of view)."""
-    from tangent_spark.plans.search import _cold_sources, _cursor, _wand_plan
+    from tangent_spark.plans.search import ScoreSpec, _bm25_plan, _cold_sources
 
     cfg = store.get_config()
     qts = fuzzy_terms(
         store.read(spark, "term_stats"), query, cfg.tokenizer, max_expansions,
         prefix_length, transpositions,
     )
-    if not qts:
-        return spark.createDataFrame([], "doc_id long, score double")
-    return _wand_plan(
-        qts=qts, cfg=cfg, k=k, with_metrics=with_metrics, after=_cursor(after),
-        **_cold_sources(spark, store),
-    )
+    spec = ScoreSpec(tuple(qts), k, after=after, with_metrics=with_metrics)
+    return _bm25_plan(_cold_sources(spark, store), spec, cfg)

@@ -151,8 +151,13 @@ def grouped_topk(
     by (best score desc, best doc_id asc), docs within a group by
     (score desc, doc_id asc), group_hits = total matches in the group
     (Solr numFound per group)."""
-    from tangent_spark.plans.boolean import _facet_map
-    from tangent_spark.plans.search import load_deleted_ids, query_terms
+    from tangent_spark.plans.boolean import _boolean_rows, _facet_map
+    from tangent_spark.plans.search import (
+        ScoreSpec,
+        _cold_rows,
+        _cold_sources,
+        query_terms,
+    )
 
     cfg = store.get_config()
     if by not in cfg.meta_cols:
@@ -172,29 +177,13 @@ def grouped_topk(
             "raise the cap to broadcast the doc->group map (see module "
             "docstring for the two-phase alternative at that scale)"
         )
-    cs = store.corpus_stats(spark)
-    N = float(cs["n_docs"])
-    avgdl = float(cs["avgdl"]) if cs["avgdl"] else 1.0
-    qstats = (
-        store.read(spark, "term_stats")
-        .filter(F.col("term").isin(qts))
-        .select(
-            "term",
-            F.log(
-                F.lit(1.0) + (F.lit(N) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ).alias("idf"),
-        )
-    )
+    source = _cold_sources(spark, store)
     kern = _grouped_kernel(
-        avgdl, cfg, group_limit, fmap[0], fmap[1],
-        load_deleted_ids(spark, store),
+        source["avgdl"], cfg, group_limit, fmap[0], fmap[1], source["deleted"]
     )
-    rows = (
-        store.read(spark, "postings")
-        .filter(F.col("term").isin(qts))
-        .join(F.broadcast(qstats), "term")
-        .groupBy("shard")
-        .applyInPandas(lambda pdf: kern(pdf), schema=_OUT)
+    rows = _boolean_rows(
+        _cold_rows(source, ScoreSpec(tuple(qts), group_limit)), None, kern,
+        False, schema=_OUT,
     )
     # ONE aggregate per group: count partials sum + candidate structs
     # (<= shards x group_limit each) sorted/sliced JVM-side. struct ns

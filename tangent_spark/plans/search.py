@@ -1,26 +1,29 @@
 """BM25 top-k query execution (SURVEY.md §2.5 Q1-Q13, Spark-first).
 
-Three rank-identical paths (tested against one pure-Python oracle):
+Every index-serving BM25 variant is one plan: a `ScoreSpec` (what to
+score — terms, idf multipliers, synonym or dismax groups, doc weights,
+masked ids, cursor, k) run by `_bm25_plan` over a source. The spec's
+constructor checks the block-max kernel's exactness preconditions; the
+builder builds the per-shard kernel (`_score_shard`: block-max pruning
+by interval sweep, local top-k per shard — the reference's iterator
+machinery, Q3 OR-union / Q7 galloping skip / Q10 threshold pruning,
+mathindex.cpp:197-260, collapsed into numpy), runs it through the
+shared shard runner (plans/boolean._boolean_rows) and applies the one
+(score desc, doc_id asc) top-k tail. The source picks cold or warm:
 
-1. `bm25_topk_df` — a single declarative DataFrame plan over raw docs
-   (tokenize -> join query terms -> aggregate -> TakeOrderedAndProject).
-   Catalyst handles pushdown/codegen; this is the oracle-checkable
-   path (the DuckDB SQL twin lives in __spark_entry__.py).
+* `_cold_sources(spark, store)` — the compressed IndexStore: postings
+  parquet read with the query terms as a pushed-down filter (row-group
+  pruning; postings are term-sorted within each shard), idf joined
+  JVM-side from a broadcast of the <= |terms| stats rows, one shuffle
+  of the matched compressed rows by shard.
+* `Searcher._warm_sources()` — the Searcher's cached shard partitions:
+  idf derived in-kernel from each row's global df, shards regrouped
+  inside the partition, ONE single-stage job (see the class doc).
 
-2. `bm25_topk_wand` — cold path straight off the compressed IndexStore:
-   postings parquet is read with the query terms as a pushed-down
-   filter (row-group pruning works because postings are sorted by term
-   within each shard), then each document shard scores independently
-   with block-max pruning and emits a local top-k; only k rows per
-   shard move to the global TakeOrdered. No shuffle of postings at
-   query time — the reference's whole iterator machinery (Q3 OR-union,
-   Q7 galloping skip, Q10 threshold pruning; mathindex.cpp:197-260)
-   collapses into this per-shard numpy kernel.
-
-3. `Searcher` — warm path: same kernel, but the lexicon is a resident
-   driver dict, idf rides in the closure, and the cached shard
-   partitions are scanned in ONE single-stage job (see class doc);
-   per-query latency is bounded by the bare Spark job floor.
+`bm25_topk_df` (one declarative DataFrame plan over raw docs — the
+oracle-checkable twin of __spark_entry__.py's DuckDB SQL) and
+`bm25_topk_index_full` (decodes every block) stay separate reference
+scorers; all paths are rank-identical against one pure-Python oracle.
 
 Scoring: BM25, k1/b from IndexConfig, Lucene-style idf
     idf(t)  = ln(1 + (N - df + 0.5)/(df + 0.5))
@@ -32,6 +35,7 @@ heap (mathindexbase.h:100: ties -> smaller id wins).
 
 from __future__ import annotations
 
+import dataclasses
 import math
 import os
 import re
@@ -40,17 +44,25 @@ from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tangent_spark.codec import bm25_tf_norm, decode_block
 from tangent_spark.config import IndexConfig
 from tangent_spark.functions.tokenize import terms_df, tokenize_porter, tokenize_simple
+from tangent_spark.plans.boolean import _boolean_rows
 from tangent_spark.sources.store import IndexStore
 
 
 def idf(N: int, df: int) -> float:
     return math.log(1.0 + (N - df + 0.5) / (df + 0.5))
+
+
+def _idf_col(n_docs, df: str = "df") -> Column:
+    """idf() as a JVM Column over column `df`; `n_docs` is a number or a
+    Column (fielded indexes: the field's own docCount)."""
+    n = n_docs if isinstance(n_docs, Column) else F.lit(float(n_docs))
+    return F.log(F.lit(1.0) + (n - F.col(df) + 0.5) / (F.col(df) + 0.5))
 
 
 def query_terms(query: str, tokenizer: str) -> list[str]:
@@ -563,74 +575,62 @@ def _score_shard(
     return kernel
 
 
-def _wand_plan(
-    postings: DataFrame,
-    term_stats: DataFrame,
-    qts: list[str],
-    n_docs: int,
-    avgdl: float,
-    cfg: IndexConfig,
-    k: int,
-    with_metrics: bool,
-    deleted=None,
-    after=None,
-    doc_weights=None,
-    term_boosts=None,
-) -> DataFrame:
-    """The whole query as ONE declarative plan: filter postings to the
-    query terms (parquet row-group pruning / in-memory scan), broadcast-
-    join the per-term df to compute idf JVM-side, per-shard block-max
-    kernel, global TakeOrderedAndProject. One Spark job per query.
-    `term_boosts` ({term: weight}, Lucene `term^2.5`) scales the idf
-    BEFORE it reaches the kernel, so block-max upper bounds (idf *
-    tfn(max_tf, min_dl)) carry the boost and pruning stays exact.
-    Cold callers take postings, term_stats, n_docs, avgdl and deleted
-    from _cold_sources."""
-    qstats = term_stats.filter(F.col("term").isin(qts)).select(
-        "term",
-        F.log(
-            F.lit(1.0)
-            + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        ).alias("idf"),
-    )
-    if term_boosts:
-        bmap = F.create_map(
-            *[F.lit(x) for t, w in term_boosts.items() for x in (t, float(w))]
-        )
-        qstats = qstats.select(
-            "term",
-            (
-                F.col("idf")
-                * F.coalesce(F.element_at(bmap, F.col("term")), F.lit(1.0))
-            ).alias("idf"),
-        )
-    kern = _score_shard(
-        avgdl, cfg, k, deleted=deleted, after=after, doc_weights=doc_weights
-    )
+@dataclasses.dataclass(frozen=True)
+class ScoreSpec:
+    """One BM25 query for _bm25_plan. The constructor is the one place
+    that checks the kernel's exactness preconditions: block-max bounds
+    (idf * tfn(max_tf, min_dl), see _score_shard) only upper-bound the
+    scores they stand for when every idf multiplier is >= 0, every doc
+    weight lies in (0, 1] and the dismax tie in [0, 1] — a negative
+    boost turns its block's bound into a lower bound, and the threshold
+    skip then drops qualifying ranges.
 
-    def apply_kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        return kern(pdf)
+    `terms` are the index terms the postings scan keeps. `boosts`
+    ({term: idf multiplier}) is Lucene `term^2.5`; `syn` ({term: group})
+    scores each group as one SynonymQuery pseudo-term; `clauses`
+    ((term, dismax group, multiplier) rows) scores a fielded index with
+    per-field docCount idf and per-row field avgdl, summing the rows'
+    contributions — or, with `tie`, combining each group as Lucene's
+    DisjunctionMaxQuery. `doc_weights` is (sorted doc ids, weights,
+    missing); `exclude` ids are masked like tombstones; `after` is the
+    searchAfter cursor (score, doc_id)."""
 
-    local = (
-        postings.filter(F.col("term").isin(qts))
-        .join(F.broadcast(qstats), "term")
-        .groupBy("shard")
-        .applyInPandas(apply_kern, schema=_WAND_SCHEMA)
-    )
-    cols = ["doc_id", "score"] + (
-        ["shard", "blocks_decoded", "blocks_skipped", "docs_scored"]
-        if with_metrics
-        else []
-    )
-    return local.select(*cols).orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    terms: tuple
+    k: int
+    boosts: dict | None = None
+    syn: dict | None = None
+    clauses: tuple = ()
+    tie: float | None = None
+    doc_weights: tuple | None = None
+    exclude: tuple = ()
+    after: tuple | None = None
+    with_metrics: bool = False
+
+    def __post_init__(self):
+        mults = [*(self.boosts or {}).values(), *(b for _, _, b in self.clauses)]
+        if self.clauses and not all(b > 0 for b in mults):
+            raise ValueError("field boosts must be strictly positive")
+        if not all(b >= 0 for b in mults):
+            raise ValueError("term boosts must be >= 0")
+        if self.tie is not None:
+            if not 0.0 <= self.tie <= 1.0:
+                raise ValueError(f"tie must be in [0, 1], got {self.tie}")
+            object.__setattr__(self, "tie", float(self.tie))
+        if self.doc_weights is not None:
+            w = np.append(self.doc_weights[1], self.doc_weights[2])
+            if not np.all((w > 0.0) & (w <= 1.0)):
+                raise ValueError("doc weights and the missing weight must be in (0, 1]")
+        if self.after is not None:
+            object.__setattr__(
+                self, "after", (float(self.after[0]), int(self.after[1]))
+            )
 
 
 def _cold_sources(spark: SparkSession, store: IndexStore) -> dict:
-    """The store-side keyword arguments of _wand_plan and _boolean_plan
-    for a cold query: postings and term_stats handles, corpus n_docs
-    and avgdl, and the tombstone ids — all memoized per index
-    generation, so a repeat query re-lists no parquet and runs no
-    stats job."""
+    """The cold source of _bm25_plan and _boolean_plan: postings and
+    term_stats handles, corpus n_docs and avgdl, and the tombstone ids —
+    all memoized per index generation, so a repeat query re-lists no
+    parquet and runs no stats job."""
     cs = store.corpus_stats(spark)
     return dict(
         postings=store.read(spark, "postings"),
@@ -641,9 +641,119 @@ def _cold_sources(spark: SparkSession, store: IndexStore) -> dict:
     )
 
 
-def _cursor(after):
-    """A caller's searchAfter cursor as the kernel's (score, doc_id)."""
-    return (float(after[0]), int(after[1])) if after is not None else None
+def _cold_rows(source: dict, spec: ScoreSpec) -> DataFrame:
+    """The cold postings rows `spec` scores, each joined JVM-side with
+    its idf (times its multiplier) from a broadcast of the <= |terms|
+    stats rows; synonym rows also carry their group, fielded rows their
+    field's avgdl and dismax group."""
+    ts = source["term_stats"]
+    spark = ts.sparkSession
+    if spec.syn:
+        # group idf from the group's max df over the members PRESENT in
+        # the vocabulary (Lucene SynonymQuery docFreq)
+        mdf = spark.createDataFrame(sorted(spec.syn.items()), "term string, syn int")
+        stats = ts.join(F.broadcast(mdf), "term").select("term", "syn", "df")
+        gdf = stats.groupBy("syn").agg(F.max("df").alias("gdf"))
+        qstats = stats.join(F.broadcast(gdf), "syn").select(
+            "term", "syn", _idf_col(source["n_docs"], "gdf").alias("idf")
+        )
+    elif spec.clauses:
+        from tangent_spark.plans.fielded import FIELD_SEP
+
+        # per-field docCount idf and per-field avgdl (Lucene norms)
+        cdf = spark.createDataFrame(
+            list(spec.clauses), "term string, dmax long, boost double"
+        )
+        qstats = (
+            ts.join(F.broadcast(cdf), "term")
+            .withColumn("field", F.substring_index("term", FIELD_SEP, 1))
+            .join(F.broadcast(source["field_stats"]), "field")
+            .select(
+                "term",
+                (F.col("boost") * _idf_col(F.col("n_docs").cast("double"))).alias("idf"),
+                "avgdl",
+                "dmax",
+            )
+        )
+    else:
+        qstats = ts.filter(F.col("term").isin(list(spec.terms))).select(
+            "term", _idf_col(source["n_docs"]).alias("idf")
+        )
+        if spec.boosts:
+            bmap = F.create_map(
+                *[F.lit(x) for t, w in spec.boosts.items() for x in (t, float(w))]
+            )
+            qstats = qstats.select(
+                "term",
+                (
+                    F.col("idf")
+                    * F.coalesce(F.element_at(bmap, F.col("term")), F.lit(1.0))
+                ).alias("idf"),
+            )
+    return (
+        source["postings"]
+        .filter(F.col("term").isin(list(spec.terms)))
+        .join(F.broadcast(qstats), "term")
+    )
+
+
+def _spec_kernel(source: dict, spec: ScoreSpec, cfg: IndexConfig, counter=None):
+    """The per-shard block-max kernel for `spec` over `source`'s rows.
+    Warm rows carry their term's global df, so the kernel derives idf
+    (and applies `boosts`) itself; cold rows arrive with it."""
+    deleted = source["deleted"]
+    if spec.exclude:
+        deleted = np.unique(np.append(deleted, np.asarray(spec.exclude, np.int64)))
+    kern = _score_shard(
+        source["avgdl"], cfg, spec.k, counter=counter, deleted=deleted,
+        after=spec.after, doc_weights=spec.doc_weights, dismax_tie=spec.tie,
+    )
+    if not source.get("shard_partitioned"):
+        return kern
+    add_idf = _idf_from_g_df(source["n_docs"])
+    boosts = spec.boosts
+
+    def warm_kernel(pdf: pd.DataFrame, cache=None) -> pd.DataFrame:
+        pdf = add_idf(pdf)
+        if boosts:
+            pdf["idf"] = pdf["idf"].to_numpy() * (
+                pdf["term"].map(boosts).fillna(1.0).to_numpy()
+            )
+        return kern(pdf, cache)
+
+    return warm_kernel
+
+
+def _bm25_plan(
+    source: dict, spec: ScoreSpec, cfg: IndexConfig, counter=None
+) -> DataFrame:
+    """Every BM25 variant's plan: `spec`'s kernel over `source`'s rows
+    through the shared shard runner, then the global (score desc,
+    doc_id asc) top-k. A cold source (_cold_sources) shuffles its
+    matched compressed rows by shard — 3 jobs: the idf broadcast, the
+    shuffle map stage, the result stage; a warm source
+    (Searcher._warm_sources) regroups the cached shard partitions in
+    place — 1 job. `counter` (a Spark accumulator) receives the number
+    of blocks decoded."""
+    if not spec.terms:
+        return source["term_stats"].sparkSession.createDataFrame(
+            [], "doc_id long, score double"
+        )
+    warm = bool(source.get("shard_partitioned"))
+    local = _boolean_rows(
+        source["postings"] if warm else _cold_rows(source, spec),
+        list(spec.terms) if warm else None,
+        _spec_kernel(source, spec, cfg, counter),
+        warm,
+        schema=_WAND_SCHEMA,
+        tasks=source.get("tasks"),
+    )
+    cols = ["doc_id", "score"] + (
+        ["shard", "blocks_decoded", "blocks_skipped", "docs_scored"]
+        if spec.with_metrics
+        else []
+    )
+    return local.select(*cols).orderBy(F.desc("score"), F.asc("doc_id")).limit(spec.k)
 
 
 def bm25_topk_wand(
@@ -661,12 +771,10 @@ def bm25_topk_wand(
     (`matrix^2.5`) is honored — see split_term_boosts."""
     cfg = store.get_config()
     qts, boosts = split_term_boosts(query, cfg.tokenizer)
-    if not qts:
-        return spark.createDataFrame([], "doc_id long, score double")
-    return _wand_plan(
-        qts=qts, cfg=cfg, k=k, with_metrics=with_metrics, after=_cursor(after),
-        term_boosts=boosts, **_cold_sources(spark, store),
+    spec = ScoreSpec(
+        tuple(qts), k, boosts=boosts, after=after, with_metrics=with_metrics
     )
+    return _bm25_plan(_cold_sources(spark, store), spec, cfg)
 
 
 def boosted_topk(
@@ -693,8 +801,6 @@ def boosted_topk(
     as the filter/facet machinery."""
     from tangent_spark.plans.boolean import _facet_map
 
-    if not (0.0 < missing <= 1.0):
-        raise ValueError("missing weight must be in (0, 1]")
     if half_life_days <= 0:
         raise ValueError("half_life_days must be > 0")
     cfg = store.get_config()
@@ -715,11 +821,11 @@ def boosted_topk(
     age = np.maximum(age_days.to_numpy(np.float64), 0.0)  # future -> age 0
     weights = 1.0 / (1.0 + age / float(half_life_days))
     ok = np.isfinite(weights)
-    dw = (ids[ok], weights[ok], float(missing))
-    return _wand_plan(
-        qts=qts, cfg=cfg, k=k, with_metrics=False, after=_cursor(after),
-        doc_weights=dw, **_cold_sources(spark, store),
+    spec = ScoreSpec(
+        tuple(qts), k, doc_weights=(ids[ok], weights[ok], float(missing)),
+        after=after,
     )
+    return _bm25_plan(_cold_sources(spark, store), spec, cfg)
 
 
 def function_boosted_topk(
@@ -788,14 +894,13 @@ def function_boosted_topk(
     # bit-identically through the normalized kernel space
     w_max = float(max(weights.max() if weights.size else 0.0, float(missing)))
     scale = float(2.0 ** np.ceil(np.log2(w_max))) if w_max > 1.0 else 1.0
-    dw = (ids, weights / scale, float(missing) / scale)
-    scored = _wand_plan(
-        qts=qts, cfg=cfg, k=k, with_metrics=False,
-        after=(float(after[0]) / scale, int(after[1]))
-        if after is not None
-        else None,
-        doc_weights=dw, **_cold_sources(spark, store),
+    if scale < w_max:  # log2 can round 2^n + 1 ulp down to exactly n
+        scale *= 2.0
+    spec = ScoreSpec(
+        tuple(qts), k, doc_weights=(ids, weights / scale, float(missing) / scale),
+        after=(float(after[0]) / scale, after[1]) if after is not None else None,
     )
+    scored = _bm25_plan(_cold_sources(spark, store), spec, cfg)
     # undo the normalization so callers see true BM25 x f(doc); the
     # ordering (score desc, doc_id asc) is unchanged by the constant
     return scored.select(
@@ -828,8 +933,6 @@ def bm25_topk_synonyms(
     member terms; the kernel merges member postings per doc inside the
     shard (see _score_shard's synonym path) with block-max pruning
     intact (subadditive tf-norm keeps the bounds valid)."""
-    from tangent_spark.functions.tokenize import tokenize_porter, tokenize_simple
-
     cfg = store.get_config()
     # groups form in QUERY ORDER (query_terms sorts+dedups — that would
     # let a later token steal an earlier group's synonym and silently
@@ -837,56 +940,13 @@ def bm25_topk_synonyms(
     # exactly like a Lucene synonym graph filter
     tok = tokenize_porter if cfg.tokenizer == "porter" else tokenize_simple
     qts = list(dict.fromkeys(tok(query)))
-    if not qts:
-        return spark.createDataFrame([], "doc_id long, score double")
     assigned: dict[str, int] = {}
     for gi, t in enumerate(qts):
         members = [t] + [m for s in synonyms.get(t, ()) for m in tok(s)]
         for m in members:
             assigned.setdefault(m, gi)
-    mdf = spark.createDataFrame(
-        sorted(assigned.items()), "term string, syn int"
-    )
-    cs = store.corpus_stats(spark)
-    N = float(cs["n_docs"])
-    avgdl = float(cs["avgdl"]) if cs["avgdl"] else 1.0
-    # group idf from the group's max df over members PRESENT in the
-    # vocabulary — all broadcast-small joins, still one query job
-    stats = (
-        store.read(spark, "term_stats")
-        .join(F.broadcast(mdf), "term")
-        .select("term", "syn", "df")
-    )
-    gstats = stats.groupBy("syn").agg(F.max("df").alias("gdf"))
-    qstats = (
-        stats.join(F.broadcast(gstats), "syn")
-        .select(
-            "term",
-            "syn",
-            F.log(
-                F.lit(1.0) + (F.lit(N) - F.col("gdf") + 0.5) / (F.col("gdf") + 0.5)
-            ).alias("idf"),
-        )
-    )
-    kern = _score_shard(
-        avgdl,
-        cfg,
-        k,
-        deleted=load_deleted_ids(spark, store),
-        after=_cursor(after),
-    )
-    local = (
-        store.read(spark, "postings")
-        .filter(F.col("term").isin(sorted(assigned)))
-        .join(F.broadcast(qstats), "term")
-        .groupBy("shard")
-        .applyInPandas(lambda pdf: kern(pdf), schema=_WAND_SCHEMA)
-    )
-    return (
-        local.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    spec = ScoreSpec(tuple(sorted(assigned)), k, syn=assigned, after=after)
+    return _bm25_plan(_cold_sources(spark, store), spec, cfg)
 
 
 def elevated_topk(
@@ -994,12 +1054,7 @@ def explain_score(
     stats = store.read(spark, "term_stats").filter(F.col("term").isin(qts))
     out = (
         rows.join(F.broadcast(stats.select("term", "df")), "term")
-        .withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0) + (F.lit(N) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-        )
+        .withColumn("idf", _idf_col(N))
         .withColumn(
             "contribution",
             F.col("idf")
@@ -1228,14 +1283,32 @@ class Searcher:
                     out[r["term"]] = int(r["df"])
         return out
 
+    def _warm_sources(self) -> dict:
+        """The warm source of _bm25_plan and _boolean_plan (the cached
+        counterpart of _cold_sources): the shard-partitioned serving
+        cache, its point-in-time corpus stats and tombstones, the
+        resident lexicon lookup and the query task wave."""
+        return dict(
+            postings=self.postings,
+            term_stats=self.term_stats,
+            n_docs=self.n_docs,
+            avgdl=self.avgdl,
+            deleted=self.deleted,
+            positions=self.positions,
+            df_lookup=self._resolve_dfs,
+            shard_partitioned=True,
+            serving=self.serving if self._has_positions else None,
+            tasks=self.query_tasks,
+        )
+
     def topk(
         self, query: str, k: int, with_metrics: bool = False, decode_counter=None,
         terms: list[str] | None = None, after: tuple[float, int] | None = None,
     ) -> DataFrame:
         """Warm BM25 top-k. `terms` bypasses tokenization with an
-        already-tokenized sorted term list (more_like_this feeds the
-        source doc's stored stemmed terms here — re-stemming them could
-        alter them, Porter is not idempotent on every stem).
+        already-tokenized sorted term list (the wildcard, regexp and
+        fuzzy expansions feed vocabulary terms here — re-stemming them
+        could alter them, Porter is not idempotent on every stem).
 
         `after=(score, doc_id)` pages past a previous result's last row
         (Lucene IndexSearcher.searchAfter / Solr cursorMark): the next k
@@ -1254,37 +1327,10 @@ class Searcher:
             qts = terms
         else:
             qts, boosts = split_term_boosts(query, self.cfg.tokenizer)
-        if not qts:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        add_idf = _idf_from_g_df(self.n_docs)
-        shard_kernel = _score_shard(
-            self.avgdl, self.cfg, k, counter=decode_counter, deleted=self.deleted,
-            after=(float(after[0]), int(after[1])) if after is not None else None,
+        spec = ScoreSpec(
+            tuple(qts), k, boosts=boosts, after=after, with_metrics=with_metrics
         )
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            rows = [pdf for pdf in batches if len(pdf)]
-            if not rows:
-                return
-            all_rows = add_idf(pd.concat(rows, ignore_index=True))
-            if boosts:
-                all_rows["idf"] = all_rows["idf"].to_numpy() * (
-                    all_rows["term"].map(boosts).fillna(1.0).to_numpy()
-                )
-            for _, grp in all_rows.groupby("shard", sort=False):
-                yield shard_kernel(grp.reset_index(drop=True))
-
-        local = (
-            self.postings.filter(F.col("term").isin(qts))
-            .coalesce(self.query_tasks)
-            .mapInPandas(kernel, schema=_WAND_SCHEMA)
-        )
-        cols = ["doc_id", "score"] + (
-            ["shard", "blocks_decoded", "blocks_skipped", "docs_scored"]
-            if with_metrics
-            else []
-        )
-        return local.select(*cols).orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _bm25_plan(self._warm_sources(), spec, self.cfg, decode_counter)
 
     def topk_batch(
         self, queries: dict[str, str], k: int, decode_counter=None
@@ -1319,34 +1365,30 @@ class Searcher:
                 [], "query_id string, doc_id long, score double, rank int"
             )
         all_terms = sorted({t for qts in qterms.values() for t in qts})
-        add_idf = _idf_from_g_df(self.n_docs)
-        shard_kernel = _score_shard(
-            self.avgdl, self.cfg, k, counter=decode_counter, deleted=self.deleted
+        kern = _spec_kernel(
+            self._warm_sources(), ScoreSpec(tuple(all_terms), k), self.cfg,
+            decode_counter,
         )
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            rows = [pdf for pdf in batches if len(pdf)]
-            if not rows:
-                return
-            all_rows = add_idf(pd.concat(rows, ignore_index=True))
-            for _, grp in all_rows.groupby("shard", sort=False):
-                grp = grp.reset_index(drop=True)
-                grp["_rid"] = np.arange(len(grp), dtype=np.int64)
-                shared_cache: dict = {}
-                for qid, qts in qterms.items():
-                    sub = grp[grp["term"].isin(qts)]
-                    if not len(sub):
-                        continue
-                    out = shard_kernel(sub.reset_index(drop=True), cache=shared_cache)
-                    if len(out):
-                        out = out[["doc_id", "score"]].copy()
-                        out.insert(0, "query_id", qid)
-                        yield out
+        def per_shard(grp: pd.DataFrame) -> pd.DataFrame:
+            grp["_rid"] = np.arange(len(grp), dtype=np.int64)
+            shared_cache: dict = {}
+            outs = []
+            for qid, qts in qterms.items():
+                sub = grp[grp["term"].isin(qts)]
+                if not len(sub):
+                    continue
+                out = kern(sub.reset_index(drop=True), cache=shared_cache)
+                if len(out):
+                    out = out[["doc_id", "score"]].copy()
+                    out.insert(0, "query_id", qid)
+                    outs.append(out)
+            return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame()
 
-        local = (
-            self.postings.filter(F.col("term").isin(all_terms))
-            .coalesce(self.batch_tasks)
-            .mapInPandas(kernel, schema="query_id string, doc_id long, score double")
+        local = _boolean_rows(
+            self.postings, all_terms, per_shard, True,
+            schema="query_id string, doc_id long, score double",
+            tasks=self.batch_tasks,
         )
         from pyspark.sql import Window
 
@@ -1377,19 +1419,10 @@ class Searcher:
             self.store,
             query,
             k,
-            postings=self.postings,
-            term_stats=self.term_stats.select("term", "df"),
-            n_docs=self.n_docs,
-            avgdl=self.avgdl,
-            positions=self.positions,
             decode_counter=decode_counter,
-            df_lookup=self._resolve_dfs,
-            shard_partitioned=True,
-            deleted=self.deleted,
-            serving=self.serving if self._has_positions else None,
             min_should_match=min_should_match,
             unordered_phrases=unordered_phrases,
-            tasks=self.query_tasks,
+            **self._warm_sources(),
         )
 
     def wildcard(
@@ -1513,9 +1546,8 @@ class Searcher:
         self, doc_id: int, k: int = 10, max_terms: int = 10
     ) -> DataFrame:
         """Warm Lucene-style MLT: BM25 over the source doc's top tf*idf
-        terms, source excluded — rank-identical to the cold
-        plans.suggest.more_like_this (taking k+1 then dropping the
-        source equals masking it in-kernel, tie-breaks included).
+        terms, source masked in-kernel like a tombstone — rank-identical
+        to the cold plans.suggest.more_like_this.
         Term selection uses this Searcher's POINT-IN-TIME snapshot
         (cached df lexicon + n_docs) so selection idf and scoring idf
         agree even after later appends; the only file I/O is the
@@ -1540,14 +1572,8 @@ class Searcher:
             key=lambda x: (-x[0], x[1]),
         )
         qts = sorted(t for _, t in scored[:max_terms])
-        if not qts:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        return (
-            self.topk("", k + 1, terms=qts)
-            .filter(F.col("doc_id") != int(doc_id))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        spec = ScoreSpec(tuple(qts), k, exclude=(int(doc_id),))
+        return _bm25_plan(self._warm_sources(), spec, self.cfg)
 
     def _route_filter_cached(self, where: str, max_driver_candidates: int):
         """Evaluate (or recall) a metadata predicate's candidate route —
@@ -1602,21 +1628,12 @@ class Searcher:
             self.store,
             query,
             k,
-            postings=self.postings,
-            term_stats=self.term_stats.select("term", "df"),
-            n_docs=self.n_docs,
-            avgdl=self.avgdl,
-            positions=self.positions,
             decode_counter=decode_counter,
-            df_lookup=self._resolve_dfs,
-            shard_partitioned=True,
-            deleted=self.deleted,
             ext_cand=ids,
             cand_df=cand_df,
-            serving=self.serving if self._has_positions else None,
             min_should_match=min_should_match,
             unordered_phrases=unordered_phrases,
-            tasks=self.query_tasks,
+            **self._warm_sources(),
         )
 
     def facets(
@@ -1710,22 +1727,13 @@ class Searcher:
             self.store,
             query,
             0,
-            postings=self.postings,
-            term_stats=self.term_stats.select("term", "df"),
-            n_docs=self.n_docs,
-            avgdl=self.avgdl,
-            positions=self.positions,
             decode_counter=decode_counter,
-            df_lookup=self._resolve_dfs,
-            shard_partitioned=True,
-            deleted=self.deleted,
             ext_cand=ids,
             cand_df=cand_df,
             return_matches=True,
-            serving=self.serving if self._has_positions else None,
             facet=facet,
             min_should_match=min_should_match,
-            tasks=self.query_tasks,
+            **self._warm_sources(),
         )
         if facet is not None:
             return matches

@@ -155,21 +155,14 @@ def more_like_this(
     the source doc's top tf*idf terms, source doc excluded. Served by
     the standard block-max WAND kernel — an MLT query costs exactly one
     user query plus the bounded term-selection read."""
-    from tangent_spark.plans.search import _cold_sources, _wand_plan
-
-    import numpy as np
+    from tangent_spark.plans.search import ScoreSpec, _bm25_plan, _cold_sources
 
     qts = mlt_query_terms(spark, store, doc_id, max_terms)
-    if not qts:
-        return spark.createDataFrame([], "doc_id long, score double")
-    src = _cold_sources(spark, store)
     # the source doc must never be its own suggestion: mask it exactly
     # like a tombstone (k+1 then re-limit would also work, but this
     # keeps the kernel's top-k tight)
-    src["deleted"] = np.unique(np.append(src["deleted"], np.int64(doc_id)))
-    return _wand_plan(
-        qts=qts, cfg=store.get_config(), k=k, with_metrics=False, **src
-    )
+    spec = ScoreSpec(tuple(qts), k, exclude=(int(doc_id),))
+    return _bm25_plan(_cold_sources(spark, store), spec, store.get_config())
 
 
 def spellcheck_collate(

@@ -245,18 +245,14 @@ def regexp_topk(
     """Cold regexp BM25 top-k: expand, then the standard ONE-job
     block-max WAND plan (deleted docs masked, searchAfter paging
     supported)."""
-    from tangent_spark.plans.search import _cold_sources, _cursor, _wand_plan
+    from tangent_spark.plans.search import ScoreSpec, _bm25_plan, _cold_sources
 
     cfg = store.get_config()
     qts = regexp_terms(
         store.read(spark, "term_stats"), query, cfg.tokenizer, max_expansions
     )
-    if not qts:
-        return spark.createDataFrame([], "doc_id long, score double")
-    return _wand_plan(
-        qts=qts, cfg=cfg, k=k, with_metrics=with_metrics, after=_cursor(after),
-        **_cold_sources(spark, store),
-    )
+    spec = ScoreSpec(tuple(qts), k, after=after, with_metrics=with_metrics)
+    return _bm25_plan(_cold_sources(spark, store), spec, cfg)
 
 
 def parse_wildcard_query(
@@ -382,7 +378,7 @@ def wildcard_topk(
     then the standard ONE-job block-max WAND plan (deleted docs masked,
     searchAfter paging supported — the expanded query is an ordinary
     disjunction from the kernel's point of view)."""
-    from tangent_spark.plans.search import _cold_sources, _cursor, _wand_plan
+    from tangent_spark.plans.search import ScoreSpec, _bm25_plan, _cold_sources
 
     cfg = store.get_config()
     qts = wildcard_terms(
@@ -392,9 +388,5 @@ def wildcard_topk(
         max_expansions,
         term_stats_rev=load_rev_terms(spark, store),
     )
-    if not qts:
-        return spark.createDataFrame([], "doc_id long, score double")
-    return _wand_plan(
-        qts=qts, cfg=cfg, k=k, with_metrics=with_metrics, after=_cursor(after),
-        **_cold_sources(spark, store),
-    )
+    spec = ScoreSpec(tuple(qts), k, after=after, with_metrics=with_metrics)
+    return _bm25_plan(_cold_sources(spark, store), spec, cfg)

@@ -10,6 +10,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from tangent_spark.api import search
 from tangent_spark.config import IndexConfig
 from tangent_spark.corpus import generate_pages, pages_with_doc_ids
 from tangent_spark.oracle import _tok
@@ -351,6 +352,13 @@ def test_dismax_validates_inputs(spark, fielded_store):
         dismax_topk(spark, fielded_store, "matrix", 5, BOOSTS, tie=1.5)
     with pytest.raises(ValueError, match="positive"):
         dismax_topk(spark, fielded_store, "matrix", 5, {"title": -1.0}, tie=0.0)
+    # the sum path too: a negative idf makes the block bound a lower
+    # bound, so the threshold skip would drop qualifying ranges
+    signed = {"title": -1.3, "body": 0.9}
+    with pytest.raises(ValueError, match="positive"):
+        fielded_topk(spark, fielded_store, "matrix", 5, signed)
+    with pytest.raises(ValueError, match="positive"):
+        search(spark, fielded_store, "matrix", 5, boosts=signed)
 
 
 # ---- field-scoped query syntax (Lucene classic QueryParser) -------------

@@ -121,24 +121,14 @@ def test_unified_index_formula_terms(spark, pages, tmp_path_factory):
     assert res.count() == 0
     # query the postings directly with the formula term (bypasses the word
     # tokenizer, which would split the tuple separator)
-    from tangent_spark.plans.search import _wand_plan
+    from tangent_spark.plans.search import ScoreSpec, _bm25_plan, _cold_sources
     import pyspark.sql.functions as SF
 
-    cs = spark.read.parquet(store.path("corpus_stats")).collect()[0]
     stats = (
         spark.read.parquet(store.path("term_stats"))
         .filter(SF.col("term") == t)
         .collect()
     )
     assert stats, "formula term missing from unified term stats"
-    rows = _wand_plan(
-        spark.read.parquet(store.path("postings")),
-        spark.read.parquet(store.path("term_stats")),
-        [t],
-        int(cs["n_docs"]),
-        float(cs["avgdl"]),
-        CFG,
-        5,
-        False,
-    ).collect()
+    rows = _bm25_plan(_cold_sources(spark, store), ScoreSpec((t,), 5), CFG).collect()
     assert len(rows) > 0 and rows[0]["score"] > 0

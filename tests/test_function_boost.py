@@ -107,6 +107,17 @@ def test_cursor_paging_round_trips_exactly(spark, fn_setup):
     assert p1 + p2 == full
 
 
+def test_weight_just_above_a_power_of_two(spark, fn_setup):
+    """log2(64 + 1 ulp) rounds to 6.0, so ceil(log2) alone picks 64 and
+    leaves a normalized weight above 1; the next power of two is 128."""
+    store, local = fn_setup
+    got = [
+        (int(r["doc_id"]), float(r["score"]))
+        for r in function_boosted_topk(spark, store, Q, 10, "64.00000000000001D").collect()
+    ]
+    assert_rank_identical(got, fn_oracle(local, Q, 10, lambda u, lg: 64.00000000000001))
+
+
 def test_invalid_boosts_raise(spark, fn_setup):
     store, _ = fn_setup
     with pytest.raises(ValueError, match="positive and finite"):

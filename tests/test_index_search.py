@@ -300,27 +300,53 @@ def test_topk_batch_equals_individual(spark, index_store):
     s.close()
 
 
-def test_warm_query_is_one_job_even_on_full_tail_miss(spark, index_store, corpus):
+@pytest.mark.parametrize(
+    "query, cursor_at",
+    [
+        ("matrix convergence theorem", None),
+        ("matrix^2 convergence theorem", None),  # Lucene term boost
+        ("matrix convergence theorem", 2),  # searchAfter past rank 3
+    ],
+    ids=["plain", "term_boost", "cursor"],
+)
+def test_warm_query_is_one_job_even_on_full_tail_miss(
+    spark, index_store, corpus, query, cursor_at
+):
     """Round-3 review #3: a query whose terms ALL miss the driver head
     lexicon must still run as ONE Spark job — idf comes off the cached
-    rows' g_df column, never a separate stats collect."""
+    rows' g_df column, never a separate stats collect. A term boost and
+    a searchAfter cursor ride the same one-job plan; the boosted query
+    must match the cold plan, the others the oracle."""
     from tangent_spark.plans.search import Searcher
 
     _, local = corpus
     s = Searcher(spark, index_store, max_lexicon=1)  # head holds 1 term only
     try:
         assert not s._full_lexicon and len(s.dfs) == 1
-        query = "matrix convergence theorem"
         assert not any(t in s.dfs for t in query.split())  # 100% tail
+        after, want = None, bm25_rank(local, query, 10)
+        if cursor_at is not None:
+            page = s.topk(query, 10).collect()
+            after = (page[cursor_at]["score"], page[cursor_at]["doc_id"])
+            want = bm25_rank(local, query, 11 + cursor_at)[cursor_at + 1:]
+        elif "^" in query:
+            want = [
+                (r["doc_id"], r["score"])
+                for r in bm25_topk_wand(spark, index_store, query, 10).collect()
+            ]
         sc = spark.sparkContext
-        sc.setJobGroup("tailq_one_job", "one-job serving check")
+        group = f"tailq_one_job {query} {cursor_at}"
+        sc.setJobGroup(group, "one-job serving check")
         try:
-            got = [(r["doc_id"], r["score"]) for r in s.topk(query, 10).collect()]
+            got = [
+                (r["doc_id"], r["score"])
+                for r in s.topk(query, 10, after=after).collect()
+            ]
         finally:
             sc.setJobGroup("tailq_done", "")
-        jobs = sc.statusTracker().getJobIdsForGroup("tailq_one_job")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert len(jobs) == 1, f"warm tail query ran {len(jobs)} jobs: {jobs}"
-        assert_rank_identical(got, bm25_rank(local, query, 10))
+        assert_rank_identical(got, want)
     finally:
         s.close()
 

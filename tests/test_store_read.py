@@ -7,6 +7,7 @@ through the same IndexStore object; a handle cached under one session
 is never handed to another.
 """
 
+import datetime
 import fnmatch
 import math
 
@@ -20,10 +21,14 @@ from tangent_spark.oracle import bm25_rank
 from tangent_spark.plans.indexer import build_index
 from tangent_spark.plans.search import (
     QUERY_TASK_ROWS_DEFAULT,
+    bm25_topk_synonyms,
     bm25_topk_wand,
+    boosted_topk,
+    function_boosted_topk,
     load_deleted_ids,
     query_task_rows,
 )
+from tangent_spark.plans.suggest import more_like_this
 from tangent_spark.plans.wildcard import parse_wildcard_query, wildcard_topk
 from tangent_spark.session import default_driver_memory
 from tangent_spark.streaming.incremental import (
@@ -32,7 +37,7 @@ from tangent_spark.streaming.incremental import (
     delete_docs,
 )
 
-CFG = IndexConfig(n_shards=4, block_size=16)
+CFG = IndexConfig(n_shards=4, block_size=16, meta_cols=("warc_ts",))
 N_FIRST = 80
 N_ALL = 120
 K = 10
@@ -157,22 +162,58 @@ def test_cold_queries_follow_every_commit(spark, pages, texts_by_url, tmp_path):
     _check_cold_queries(spark, store, docs)
 
 
-def test_warm_cold_bm25_job_count(spark, pages, tmp_path):
+# every cold BM25 variant and the Spark jobs of its repeat call
+COLD_BM25 = {
+    "plain": (lambda spark, st: bm25_topk_wand(spark, st, BM25_Q, K), 3),
+    "term_boost": (
+        lambda spark, st: bm25_topk_wand(spark, st, "matrix^2 convergence theorem", K),
+        3,
+    ),
+    "cursor": (lambda spark, st: bm25_topk_wand(spark, st, BM25_Q, K, after=(1.0, 5)), 3),
+    # + the synonym-member broadcast and the group max-df aggregate
+    "synonyms": (
+        lambda spark, st: bm25_topk_synonyms(spark, st, BM25_Q, K, {"matrix": ["tensor"]}),
+        6,
+    ),
+    # + the source doc's term selection
+    "more_like_this": (lambda spark, st: more_like_this(spark, st, 5, K), 5),
+    # + the doc -> weight map
+    "boosted": (
+        lambda spark, st: boosted_topk(
+            spark, st, BM25_Q, K, "warc_ts", datetime.datetime(2025, 6, 1)
+        ),
+        4,
+    ),
+    "function_boosted": (
+        lambda spark, st: function_boosted_topk(
+            spark, st, BM25_Q, K, "1.0 + 0.05 * ln(1 + length(url))"
+        ),
+        4,
+    ),
+    # + the pattern expansion over the vocabulary
+    "wildcard": (lambda spark, st: wildcard_topk(spark, st, WILD_Q, K), 4),
+}
+
+
+@pytest.mark.parametrize("variant", list(COLD_BM25))
+def test_warm_cold_bm25_job_count(spark, pages, tmp_path, variant):
     """With handles, corpus stats and tombstones memoized, a repeat cold
     BM25 query runs only its own plan's jobs: the broadcast of the
     query-term idf rows, the shard shuffle map stage and the result
-    stage."""
+    stage — plus, for a variant, the bounded jobs that build its query
+    (noted in COLD_BM25)."""
+    run, jobs = COLD_BM25[variant]
     store = _build(spark, pages, str(tmp_path / "idx"))
-    want = _rows(bm25_topk_wand(spark, store, BM25_Q, K))
+    want = _rows(run(spark, store))
     sc = spark.sparkContext
-    group = "test-cold-bm25-jobs"
-    sc.setJobGroup(group, "second cold bm25_topk_wand")
+    group = f"test-cold-bm25-jobs-{variant}"
+    sc.setJobGroup(group, f"second cold {variant}")
     try:
-        got = _rows(bm25_topk_wand(spark, store, BM25_Q, K))
+        got = _rows(run(spark, store))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert got == want
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
 
 
 @pytest.mark.parametrize(
