@@ -132,16 +132,11 @@ def main() -> None:
               s_new.boolean("data +query -join", 10), s_new.query_tasks)
     s_new.close()
 
-    cs = spark.read.parquet(store.path("corpus_stats")).collect()[0]
-    from tangent_spark.plans.search import query_terms
+    from tangent_spark.plans.search import _cold_sources, query_terms
+    from tangent_spark.sources.store import IndexStore
 
-    source = dict(
-        postings=spark.read.parquet(store.path("postings")),
-        term_stats=spark.read.parquet(store.path("term_stats")),
-        n_docs=int(cs["n_docs"]),
-        avgdl=float(cs["avgdl"]) if cs["avgdl"] else 1.0,
-        deleted=None,
-    )
+    # a fresh IndexStore has no memoized handles: every table is re-read
+    source = _cold_sources(spark, IndexStore(idx))
     spec = ScoreSpec(tuple(query_terms(q, cfg.tokenizer)), 10)
     save("cold_wand", "before", _bm25_plan(source, spec, cfg))
     save("cold_wand", "after", bm25_topk_wand(spark, store, q, 10))

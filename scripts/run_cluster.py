@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import signal
 import subprocess
@@ -101,14 +102,17 @@ def ensure_cluster(work: str, procs: list[subprocess.Popen]) -> None:
     """Start whatever part of the cluster is not running yet, appending
     each started process to `procs`, and wait until the started master
     is ALIVE and every started worker has registered with the master."""
-    def up(pattern):
-        return subprocess.run(
+    def running(main_class):
+        # the command line must START with a java binary: a shell whose
+        # own command line merely names the class is not a JVM
+        pattern = rf"^\S*java .*{re.escape(main_class)}( |$)"
+        return int(subprocess.run(
             ["pgrep", "-fc", pattern], capture_output=True, text=True
-        ).stdout.strip() not in ("", "0")
+        ).stdout.strip() or "0")
 
     cls = os.path.join(SPARK_HOME, "bin", "spark-class")
     deadline = time.monotonic() + BRINGUP_S
-    if not up("deploy.master.Master"):
+    if not running("org.apache.spark.deploy.master.Master"):
         log = os.path.join(work, "master.log")
         procs.append(_spawn(
             [cls, "org.apache.spark.deploy.master.Master",
@@ -118,10 +122,7 @@ def ensure_cluster(work: str, procs: list[subprocess.Popen]) -> None:
         _await_line(procs[-1], log, "New state: ALIVE", deadline)
     _, worker_mem = memory_plan(N_WORKERS)
     started = []
-    n_workers = int(
-        subprocess.run(["pgrep", "-fc", "deploy.worker.Worker"],
-                       capture_output=True, text=True).stdout.strip() or "0"
-    )
+    n_workers = running("org.apache.spark.deploy.worker.Worker")
     for i in range(n_workers, N_WORKERS):
         log = os.path.join(work, f"worker_{i}.log")
         procs.append(_spawn(

@@ -17,9 +17,11 @@ from dataclasses import dataclass
 class IndexConfig:
     # --- sharding / layout ------------------------------------------------
     # Document-sharded index: every shard holds postings for ALL terms but
-    # only docs with doc_id % n_shards == shard.  At cluster scale each
-    # executor owns a shard subset; query fan-out is embarrassingly
-    # parallel and needs no postings shuffle at query time.
+    # only docs with doc_id % n_shards == shard, and answers on its own
+    # (per-shard top-k, merged globally).  A warm query regroups its
+    # cached shard partitions in place; a cold query regroups its matched
+    # postings by shard in one task when they fit query_task_rows()
+    # postings, and shuffles them by shard above that budget.
     n_shards: int = 32
     # Docs per compressed postings block (delta-gap + varint); block-max
     # metadata is kept per block for WAND pruning.

@@ -995,37 +995,47 @@ def _boolean_rows(
     schema=_OUT_SCHEMA,
     tasks: int | None = None,
 ) -> DataFrame:
-    """Run the shard kernel over the matched postings rows. Warm
-    (shard_partitioned=True): the cached postings are already
-    partitioned by shard, so this is a shuffle-free mapInPandas that
-    regroups by shard inside each partition — ONE job end to end. Cold:
-    one repartition of the <=|terms| x n_shards matched compressed
-    rows (never decoded data). `terms=None` means the caller already
-    applied its row filter (the warm in-kernel phrase route passes the
-    combined postings+positions serving scan pre-filtered by kind)."""
+    """Run the shard kernel over the matched postings rows. Rows already
+    partitioned by shard (the warm cache, shard_partitioned=True) are
+    coalesced to `tasks` partitions and regrouped by shard inside each
+    one — a shuffle-free mapInPandas, ONE job end to end. Unpartitioned
+    rows (a cold parquet scan) take the same runner when `tasks` is 1
+    (the query's postings fit one task, search._cold_tasks): every
+    shard lands in the one partition. Otherwise they shuffle by shard —
+    one repartition of the <= |terms| x n_shards matched compressed
+    rows (never decoded data) — and each shard's rows are sorted by term
+    so the kernel sums a doc's contributions in the warm cache's order.
+    `terms=None` means the caller already applied its row filter (the
+    warm in-kernel phrase route passes the combined postings+positions
+    serving scan pre-filtered by kind)."""
     pf = postings if terms is None else postings.filter(F.col("term").isin(terms))
-    if shard_partitioned:
-        if tasks:
-            # cache-size-adaptive task wave (Searcher.query_tasks): the
-            # kernel regroups by shard in-partition, so merging small
-            # cache partitions only cuts per-query task-launch and
-            # Python-worker round trips, never results
-            pf = pf.coalesce(tasks)
+    if not shard_partitioned and tasks != 1:
+        return pf.groupBy("shard").applyInPandas(
+            lambda pdf: kernel(pdf.sort_values("term", kind="stable", ignore_index=True)),
+            schema=schema,
+        )
+    if tasks:
+        # cache-size-adaptive task wave (Searcher.query_tasks): the
+        # kernel regroups by shard in-partition, so merging small
+        # cache partitions only cuts per-query task-launch and
+        # Python-worker round trips, never results
+        pf = pf.coalesce(tasks)
 
-        def mp(batches):
-            rows = [p for p in batches if len(p)]
-            if not rows:
-                return
-            allp = pd.concat(rows, ignore_index=True)
-            for _, grp in allp.groupby("shard", sort=False):
-                out = kernel(grp.reset_index(drop=True))
-                if len(out):
-                    yield out
+    def mp(batches):
+        rows = [p for p in batches if len(p)]
+        if not rows:
+            return
+        allp = pd.concat(rows, ignore_index=True)
+        if not shard_partitioned:
+            # a shard's runs arrive file by file (base build, appended
+            # batches): sort them by term, the warm cache's order
+            allp = allp.sort_values(["shard", "term"], kind="stable")
+        for _, grp in allp.groupby("shard", sort=False):
+            out = kernel(grp.reset_index(drop=True))
+            if len(out):
+                yield out
 
-        return pf.mapInPandas(mp, schema=schema)
-    return pf.groupBy("shard").applyInPandas(
-        lambda pdf: kernel(pdf), schema=schema
-    )
+    return pf.mapInPandas(mp, schema=schema)
 
 
 def boolean_topk(
@@ -1069,12 +1079,11 @@ def _boolean_plan(
     query: str,
     k: int,
     postings: DataFrame,
-    term_stats: DataFrame,
     n_docs: int,
     avgdl: float,
+    df_lookup,
     positions: DataFrame | None = None,
     decode_counter=None,
-    df_lookup=None,
     shard_partitioned: bool = False,
     deleted=None,
     ext_cand=None,
@@ -1086,14 +1095,15 @@ def _boolean_plan(
     unordered_phrases: bool = False,
     tasks: int | None = None,
 ) -> DataFrame:
-    """Shared boolean plan over any postings/term_stats DataFrames —
-    cold parquet reads (boolean_topk) or a Searcher's cached, shard-
+    """Shared boolean plan over a cold source (search._cold_sources:
+    parquet reads, boolean_topk) or a Searcher's cached, shard-
     partitioned copies (Searcher.boolean — same plan, zero file I/O for
     postings/positions and zero shuffle). `df_lookup(terms) -> {term:
-    df}` lets the warm path answer the df lookup from its resident
-    lexicon (no job); the cold path does one <=|query|-row filtered
-    collect — the price of driver-side idf, which in turn keeps the
-    whole plan free of a stats broadcast join.
+    df}` resolves idf driver-side: the warm path answers it from its
+    resident lexicon (no job), the cold path with one <= |query|-row
+    filtered collect, whose summed df also picks the cold runner
+    (search._cold_tasks: one task without a shard shuffle when the
+    query's postings fit it).
 
     Metadata filters (filtered_topk) arrive one of two ways: `ext_cand`
     (sorted int64 array, selective filters) restricts every decode
@@ -1151,29 +1161,29 @@ def _boolean_plan(
         # matches nothing (facet callers guard this route themselves)
         return spark.createDataFrame([], _OUT_SCHEMA)
 
-    # one bounded lookup resolves every positive term's df (idf) AND the
-    # seed choice; terms absent from the index simply have no idf/rows
-    lookup_terms = sorted(set(qts) | set(filters))
-    if df_lookup is not None:
-        dfs = df_lookup(lookup_terms)
-    else:
-        dfs = {
-            r["term"]: int(r["df"])
-            for r in term_stats.filter(F.col("term").isin(lookup_terms)).collect()
-        }
+    # one bounded lookup resolves every scanned term's df: the positive
+    # terms' idf, the seed choice and the cold runner's postings count;
+    # terms absent from the index simply have no idf/rows
+    all_terms = sorted(set(qts) | set(must_not) | set(filters))
+    dfs = df_lookup(all_terms)
     if any(t not in dfs for t in must) or any(t not in dfs for t in filters):
         # a required term absent from the index matches nothing
         return spark.createDataFrame([], _OUT_SCHEMA)
+    # Occur.FILTER clauses (`#term`) never score: no idf unless the term
+    # ALSO appears as a scoring clause (Lucene: `data #data` is two
+    # clauses — membership from the filter, score from the should), and
+    # must-not terms never score. Block-max/threshold bounds see a 0
+    # contribution, exact.
+    scoring = set(qts)
     idf_map = {
-        t: math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5)) for t, d in dfs.items()
+        t: math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5))
+        for t, d in dfs.items()
+        if t in scoring
     }
-    # Occur.FILTER clauses (`#term`) never score: drop their idf unless
-    # the term ALSO appears as a scoring clause (Lucene: `data #data`
-    # is two clauses — membership from the filter, score from the
-    # should). Block-max/threshold bounds see a 0 contribution, exact.
-    for t in filters:
-        if t not in set(qts):
-            idf_map.pop(t, None)
+    if not shard_partitioned:
+        from tangent_spark.plans.search import _cold_tasks
+
+        tasks = _cold_tasks(sum(dfs.values()))
     # Lucene term/phrase boosts (`term^2.5`): scale idf driver-side so
     # BOTH kernel paths' upper bounds (always idf-derived) carry the
     # boost and block-max / threshold pruning stay exact
@@ -1188,11 +1198,9 @@ def _boolean_plan(
         # every other decode candidate-restricted for free)
         seed = min(required, key=lambda t: (dfs[t], t))
         must_check = [t for t in required if t != seed]
-        all_terms = sorted(set(qts) | set(must_not) | set(filters))
     else:
         seed = None
         must_check = []
-        all_terms = sorted(set(qts) | set(must_not))
     roles = _TermRoles(
         idf_map, must_check, must_not, cfg.k1, cfg.b, avgdl,
         should_check=should_check if mm > 0 else (), mm=mm,

@@ -26,14 +26,14 @@ where N_f = docCount(field f) = docs with >= 1 token in f (Lucene's
 per-field docCount, not the corpus size), and avgdl_f is the mean
 token length of field f over those docs.
 
-Scale shape — identical to plans/search.bm25_topk_wand, ONE job per
-query: postings filtered to the |q| x |fields| prefixed terms
-(term-major parquet sort order -> row-group pruning at the scan),
-per-(field, term) stats broadcast-joined JVM-side so every postings
-row enters the shared kernel carrying its boosted ``idf`` AND its
-field's ``avgdl`` (_score_shard's per-row-avgdl path), per-shard
-block-max interval sweep, global TakeOrderedAndProject of <= k rows
-per shard. Correctness of the block-max bound under mixed fields:
+Scale shape — identical to plans/search.bm25_topk_wand: the df
+lookup collect, then postings filtered to the |q| x |fields| prefixed
+terms (term-major parquet sort order -> row-group pruning at the
+scan); the kernel gives every postings row its clause's boosted
+``idf`` (field docCount N_f) AND its field's ``avgdl``
+(_score_shard's per-row-avgdl path) from the per-field stats read
+once per index generation, runs the per-shard block-max interval
+sweep, and a global TakeOrderedAndProject keeps <= k rows per shard. Correctness of the block-max bound under mixed fields:
 each row's bound is computed with ITS OWN field's avgdl, and a doc's
 rows for every field live in the same shard (shard = doc_id %
 n_shards), so each doc is scored exactly once with its full
@@ -191,10 +191,9 @@ def fielded_topk(
 def _fielded_plan(spark, store, cfg, k, clauses, after, tie):
     """The fielded routes' one BM25 plan: `clauses` ({(field:term,
     dismax group): boost}) become the ScoreSpec's clause rows, served
-    off the cold source plus the per-field stats (docCount idf, avgdl)
-    — all joined JVM-side on vocabulary-scale tables filtered to the
-    <= |q| x |fields| clause terms, then broadcast into the postings
-    scan."""
+    off the cold source plus the per-field stats ({field: (docCount,
+    avgdl)}, collected once per index generation) — the kernel scores
+    each clause with its field's docCount idf and avgdl."""
     from tangent_spark.plans.search import ScoreSpec, _bm25_plan, _cold_sources
 
     spec = ScoreSpec(
@@ -202,9 +201,11 @@ def _fielded_plan(spark, store, cfg, k, clauses, after, tie):
         clauses=tuple(sorted((t, g, b) for (t, g), b in clauses.items())),
         tie=tie, after=after,
     )
-    source = dict(
-        _cold_sources(spark, store), field_stats=store.read(spark, "field_stats")
-    )
+    field_stats = store.memo(spark, ("field_stats",), lambda: {
+        r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
+        for r in store.read(spark, "field_stats").collect()
+    })
+    source = dict(_cold_sources(spark, store), field_stats=field_stats)
     return _bm25_plan(source, spec, cfg)
 
 
@@ -233,10 +234,9 @@ def dismax_topk(
     stopword-stuffed-body pathology of the plain sum); tie=1 is
     exactly fielded_topk's sum (property-tested).
 
-    Plan shape is identical to fielded_topk: ONE single-stage job, the
-    postings scan pruned to |q| x |fields| terms, per-(field, term)
-    boosted idf + field avgdl + dismax group id broadcast into the
-    shared block-max kernel (_score_shard's dmax path). The threshold
+    Plan shape is identical to fielded_topk: the postings scan pruned
+    to |q| x |fields| terms, per-(field, term) boosted idf + field
+    avgdl + dismax group id attached in the shared block-max kernel (_score_shard's dmax path). The threshold
     skip stays EXACT for tie in [0, 1] because each range's summed
     block bounds upper-bound the plain cross-field sum, which
     upper-bounds the dismax combination."""
@@ -302,9 +302,8 @@ def field_query_topk(
     like Lucene's two TermQueries while decoding each block once).
 
     Plan shape matches fielded_topk: the explicit clause table (a few
-    rows) joins term_stats + field_stats JVM-side for boosted idf /
-    per-field avgdl / dismax group, broadcasts into the pruned
-    postings scan, ONE single-stage kernel job."""
+    rows) gives each pruned postings row its boosted idf / per-field
+    avgdl / dismax group inside the kernel."""
     cfg = store.get_config()
     unknown = set(qf) - set(cfg.fields)
     if unknown:

@@ -156,6 +156,7 @@ def grouped_topk(
         ScoreSpec,
         _cold_rows,
         _cold_sources,
+        _idf_from_g_df,
         query_terms,
     )
 
@@ -178,12 +179,16 @@ def grouped_topk(
             "docstring for the two-phase alternative at that scale)"
         )
     source = _cold_sources(spark, store)
+    matched, tasks = _cold_rows(source, ScoreSpec(tuple(qts), group_limit))
+    if matched is None:
+        return spark.createDataFrame([], _RESULT)
     kern = _grouped_kernel(
         source["avgdl"], cfg, group_limit, fmap[0], fmap[1], source["deleted"]
     )
+    add_idf = _idf_from_g_df(source["n_docs"])
     rows = _boolean_rows(
-        _cold_rows(source, ScoreSpec(tuple(qts), group_limit)), None, kern,
-        False, schema=_OUT,
+        matched, None, lambda pdf: kern(add_idf(pdf)), False, schema=_OUT,
+        tasks=tasks,
     )
     # ONE aggregate per group: count partials sum + candidate structs
     # (<= shards x group_limit each) sorted/sliced JVM-side. struct ns

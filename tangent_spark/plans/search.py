@@ -11,14 +11,20 @@ mathindex.cpp:197-260, collapsed into numpy), runs it through the
 shared shard runner (plans/boolean._boolean_rows) and applies the one
 (score desc, doc_id asc) top-k tail. The source picks cold or warm:
 
-* `_cold_sources(spark, store)` — the compressed IndexStore: postings
-  parquet read with the query terms as a pushed-down filter (row-group
-  pruning; postings are term-sorted within each shard), idf joined
-  JVM-side from a broadcast of the <= |terms| stats rows, one shuffle
-  of the matched compressed rows by shard.
-* `Searcher._warm_sources()` — the Searcher's cached shard partitions:
-  idf derived in-kernel from each row's global df, shards regrouped
-  inside the partition, ONE single-stage job (see the class doc).
+* `_cold_sources(spark, store)` — the compressed IndexStore: one
+  <= |terms|-row collect of the query terms' global df, then the
+  postings parquet read with the query terms as a pushed-down filter
+  (row-group pruning; postings are term-sorted within each run), each
+  row carrying its term's df. When the query's postings (summed df)
+  fit one task (query_task_rows), one task regroups the matched rows
+  by shard in-partition — 2 jobs, no exchange; above that budget they
+  shuffle by shard — 3 jobs.
+* `Searcher._warm_sources()` — the Searcher's cached shard partitions,
+  whose rows carry their term's global df; shards regrouped inside the
+  partition, ONE single-stage job (see the class doc).
+
+Either way the kernel derives idf from the rows' df (`_idf_from_g_df`),
+so cold and warm scores are bit-identical.
 
 `bm25_topk_df` (one declarative DataFrame plan over raw docs — the
 oracle-checkable twin of __spark_entry__.py's DuckDB SQL) and
@@ -275,10 +281,9 @@ def _score_shard(
 ):
     """Per-shard kernel: block-max pruning via an interval sweep.
 
-    Input rows carry a precomputed `idf` column (joined JVM-side so the
-    whole query is ONE Spark job — no separate driver-side stats
-    collect). Block intervals (known from metadata alone) partition
-    doc-space into ranges; each range has upper bound = sum of covering
+    Input rows carry a precomputed `idf` column (_spec_kernel derives
+    it from the rows' global df, _idf_from_g_df). Block intervals
+    (known from metadata alone) partition doc-space into ranges; each range has upper bound = sum of covering
     blocks' idf*max_tfn. Ranges are scored in descending upper-bound
     order with a running top-k threshold; once the bound falls below
     the threshold every remaining range is skipped without decoding.
@@ -627,80 +632,88 @@ class ScoreSpec:
 
 
 def _cold_sources(spark: SparkSession, store: IndexStore) -> dict:
-    """The cold source of _bm25_plan and _boolean_plan: postings and
-    term_stats handles, corpus n_docs and avgdl, and the tombstone ids —
-    all memoized per index generation, so a repeat query re-lists no
-    parquet and runs no stats job."""
+    """The cold source of _bm25_plan and _boolean_plan: the postings
+    handle, corpus n_docs and avgdl, the tombstone ids — all memoized
+    per index generation, so a repeat query re-lists no parquet and runs
+    no stats job — and a df lookup that is one <= |terms|-row collect of
+    term_stats per query (the warm source answers it from its resident
+    lexicon)."""
     cs = store.corpus_stats(spark)
+    ts = store.read(spark, "term_stats")
+
+    def df_lookup(terms: Sequence[str]) -> dict[str, int]:
+        if not terms:
+            return {}
+        rows = ts.filter(F.col("term").isin(list(terms))).select("term", "df")
+        return {r["term"]: int(r["df"]) for r in rows.collect()}
+
     return dict(
         postings=store.read(spark, "postings"),
-        term_stats=store.read(spark, "term_stats"),
         n_docs=int(cs["n_docs"]),
         avgdl=float(cs["avgdl"]) if cs["avgdl"] else 1.0,
         deleted=load_deleted_ids(spark, store),
+        df_lookup=df_lookup,
     )
 
 
-def _cold_rows(source: dict, spec: ScoreSpec) -> DataFrame:
-    """The cold postings rows `spec` scores, each joined JVM-side with
-    its idf (times its multiplier) from a broadcast of the <= |terms|
-    stats rows; synonym rows also carry their group, fielded rows their
-    field's avgdl and dismax group."""
-    ts = source["term_stats"]
-    spark = ts.sparkSession
+def _cold_tasks(n_postings: int) -> int | None:
+    """The cold runner for a query whose index terms hold `n_postings`
+    postings (their summed global df): 1 — one task that regroups the
+    matched rows by shard in-partition, no exchange — when they fit the
+    warm path's per-task budget (query_task_rows), else None — one
+    shuffle of the matched compressed rows by shard."""
+    return 1 if n_postings <= query_task_rows() else None
+
+
+def _cold_rows(source: dict, spec: ScoreSpec):
+    """(rows, tasks): the cold postings rows `spec` scores and the task
+    count of their runner (_cold_tasks), or (None, None) when no query
+    term is in the index. The df lookup (one <= |terms|-row collect)
+    gives every present term's global df, which the rows then carry as
+    `g_df`, exactly like the warm cache's rows — a synonym member
+    carries its group's max df over the members present (Lucene
+    SynonymQuery docFreq)."""
+    dfs = source["df_lookup"](spec.terms)
+    if not dfs:
+        return None, None
+    row_df = dfs
     if spec.syn:
-        # group idf from the group's max df over the members PRESENT in
-        # the vocabulary (Lucene SynonymQuery docFreq)
-        mdf = spark.createDataFrame(sorted(spec.syn.items()), "term string, syn int")
-        stats = ts.join(F.broadcast(mdf), "term").select("term", "syn", "df")
-        gdf = stats.groupBy("syn").agg(F.max("df").alias("gdf"))
-        qstats = stats.join(F.broadcast(gdf), "syn").select(
-            "term", "syn", _idf_col(source["n_docs"], "gdf").alias("idf")
-        )
-    elif spec.clauses:
-        from tangent_spark.plans.fielded import FIELD_SEP
-
-        # per-field docCount idf and per-field avgdl (Lucene norms)
-        cdf = spark.createDataFrame(
-            list(spec.clauses), "term string, dmax long, boost double"
-        )
-        qstats = (
-            ts.join(F.broadcast(cdf), "term")
-            .withColumn("field", F.substring_index("term", FIELD_SEP, 1))
-            .join(F.broadcast(source["field_stats"]), "field")
-            .select(
-                "term",
-                (F.col("boost") * _idf_col(F.col("n_docs").cast("double"))).alias("idf"),
-                "avgdl",
-                "dmax",
-            )
-        )
-    else:
-        qstats = ts.filter(F.col("term").isin(list(spec.terms))).select(
-            "term", _idf_col(source["n_docs"]).alias("idf")
-        )
-        if spec.boosts:
-            bmap = F.create_map(
-                *[F.lit(x) for t, w in spec.boosts.items() for x in (t, float(w))]
-            )
-            qstats = qstats.select(
-                "term",
-                (
-                    F.col("idf")
-                    * F.coalesce(F.element_at(bmap, F.col("term")), F.lit(1.0))
-                ).alias("idf"),
-            )
-    return (
+        gdf: dict = {}
+        for t, d in dfs.items():
+            gdf[spec.syn[t]] = max(d, gdf.get(spec.syn[t], 0))
+        row_df = {t: gdf[spec.syn[t]] for t in dfs}
+    g_df = F.create_map(*[F.lit(x) for t in sorted(row_df) for x in (t, row_df[t])])
+    rows = (
         source["postings"]
-        .filter(F.col("term").isin(list(spec.terms)))
-        .join(F.broadcast(qstats), "term")
+        .filter(F.col("term").isin(sorted(dfs)))
+        .withColumn("g_df", g_df[F.col("term")])
     )
+    return rows, _cold_tasks(sum(dfs.values()))
+
+
+def _field_clauses(source: dict, spec: ScoreSpec) -> pd.DataFrame:
+    """`spec`'s fielded clause rows as a frame: (term, dmax, boost) plus
+    the clause field's docCount (`n_docs`, the idf's N) and avgdl
+    (Lucene per-field norms). Clauses on a field without documents
+    match nothing and are dropped."""
+    from tangent_spark.plans.fielded import FIELD_SEP
+
+    fs = source["field_stats"]
+    rows = [
+        (t, g, b, *fs[f])
+        for t, g, b in spec.clauses
+        if (f := t.split(FIELD_SEP, 1)[0]) in fs
+    ]
+    return pd.DataFrame(rows, columns=["term", "dmax", "boost", "n_docs", "avgdl"])
 
 
 def _spec_kernel(source: dict, spec: ScoreSpec, cfg: IndexConfig, counter=None):
     """The per-shard block-max kernel for `spec` over `source`'s rows.
-    Warm rows carry their term's global df, so the kernel derives idf
-    (and applies `boosts`) itself; cold rows arrive with it."""
+    Cold and warm rows alike carry their term's global df (`g_df`), so
+    idf has one path (_idf_from_g_df) and cold and warm scores are
+    bit-identical. `boosts` and fielded clause boosts multiply the idf;
+    synonym rows get their group id, and each fielded row is repeated
+    once per clause with the clause's field docCount and avgdl."""
     deleted = source["deleted"]
     if spec.exclude:
         deleted = np.unique(np.append(deleted, np.asarray(spec.exclude, np.int64)))
@@ -708,20 +721,24 @@ def _spec_kernel(source: dict, spec: ScoreSpec, cfg: IndexConfig, counter=None):
         source["avgdl"], cfg, spec.k, counter=counter, deleted=deleted,
         after=spec.after, doc_weights=spec.doc_weights, dismax_tie=spec.tie,
     )
-    if not source.get("shard_partitioned"):
-        return kern
     add_idf = _idf_from_g_df(source["n_docs"])
-    boosts = spec.boosts
+    clauses = _field_clauses(source, spec) if spec.clauses else None
 
-    def warm_kernel(pdf: pd.DataFrame, cache=None) -> pd.DataFrame:
+    def spec_kernel(pdf: pd.DataFrame, cache=None) -> pd.DataFrame:
+        if clauses is not None:
+            # inner merge keeps the rows' term order
+            pdf = pdf.merge(clauses, on="term")
         pdf = add_idf(pdf)
-        if boosts:
-            pdf["idf"] = pdf["idf"].to_numpy() * (
-                pdf["term"].map(boosts).fillna(1.0).to_numpy()
-            )
+        if spec.syn:
+            pdf["syn"] = pdf["term"].map(spec.syn).to_numpy(np.int64)
+        mult = pdf["boost"] if clauses is not None else (
+            pdf["term"].map(spec.boosts).fillna(1.0) if spec.boosts else None
+        )
+        if mult is not None:
+            pdf["idf"] = pdf["idf"].to_numpy() * mult.to_numpy(np.float64)
         return kern(pdf, cache)
 
-    return warm_kernel
+    return spec_kernel
 
 
 def _bm25_plan(
@@ -729,29 +746,32 @@ def _bm25_plan(
 ) -> DataFrame:
     """Every BM25 variant's plan: `spec`'s kernel over `source`'s rows
     through the shared shard runner, then the global (score desc,
-    doc_id asc) top-k. A cold source (_cold_sources) shuffles its
-    matched compressed rows by shard — 3 jobs: the idf broadcast, the
-    shuffle map stage, the result stage; a warm source
-    (Searcher._warm_sources) regroups the cached shard partitions in
-    place — 1 job. `counter` (a Spark accumulator) receives the number
-    of blocks decoded."""
-    if not spec.terms:
-        return source["term_stats"].sparkSession.createDataFrame(
-            [], "doc_id long, score double"
-        )
-    warm = bool(source.get("shard_partitioned"))
-    local = _boolean_rows(
-        source["postings"] if warm else _cold_rows(source, spec),
-        list(spec.terms) if warm else None,
-        _spec_kernel(source, spec, cfg, counter),
-        warm,
-        schema=_WAND_SCHEMA,
-        tasks=source.get("tasks"),
-    )
+    doc_id asc) top-k. A warm source (Searcher._warm_sources) regroups
+    the cached shard partitions in place — 1 job. A cold source
+    (_cold_sources) runs the df lookup collect, then scores the matched
+    compressed rows in one task that regroups them by shard when the
+    query's postings (summed df) fit query_task_rows() — 2 jobs, no
+    exchange — and shuffles them by shard above that budget — 3 jobs.
+    `counter` (a Spark accumulator) receives the number of blocks
+    decoded."""
     cols = ["doc_id", "score"] + (
         ["shard", "blocks_decoded", "blocks_skipped", "docs_scored"]
         if spec.with_metrics
         else []
+    )
+    spark = source["postings"].sparkSession
+    if not spec.terms:
+        return spark.createDataFrame([], "doc_id long, score double")
+    warm = bool(source.get("shard_partitioned"))
+    rows, tasks = (
+        (source["postings"], source["tasks"]) if warm else _cold_rows(source, spec)
+    )
+    if rows is None:
+        return spark.createDataFrame([], _WAND_SCHEMA).select(*cols)
+    local = _boolean_rows(
+        rows, list(spec.terms) if warm else None,
+        _spec_kernel(source, spec, cfg, counter), warm, schema=_WAND_SCHEMA,
+        tasks=tasks,
     )
     return local.select(*cols).orderBy(F.desc("score"), F.asc("doc_id")).limit(spec.k)
 
@@ -927,11 +947,10 @@ def bm25_topk_synonyms(
     however 'fast'/'quick' stem. A term claimed by two groups stays in
     the first (query order) — a multiset union would double-score it.
 
-    Scale shape: identical to bm25_topk_wand — ONE job. The group df
-    aggregation (max over members) and the per-term group idf are
-    broadcast-side JVM aggregates over vocabulary rows filtered to the
-    member terms; the kernel merges member postings per doc inside the
-    shard (see _score_shard's synonym path) with block-max pruning
+    Scale shape: identical to bm25_topk_wand. The group df (max over
+    the members present) comes from the same <= |members|-row df
+    lookup, and every member row carries it; the kernel merges member
+    postings per doc inside the shard (see _score_shard's synonym path) with block-max pruning
     intact (subadditive tf-norm keeps the bounds valid)."""
     cfg = store.get_config()
     # groups form in QUERY ORDER (query_terms sorts+dedups — that would
@@ -1072,14 +1091,20 @@ def explain_score(
 
 
 def _idf_from_g_df(n_docs: int):
-    """Kernel-side idf from the cached rows' global-df column — the
-    query plan needs no term->df lookup anywhere (same formula as
-    idf())."""
+    """Kernel-side idf from the rows' global-df column (same formula as
+    idf()): the one idf path of every BM25 kernel, cold or warm. A
+    per-row `n_docs` column (a fielded clause's field docCount)
+    overrides the corpus scalar."""
     N = float(n_docs)
 
     def add_idf(all_rows: pd.DataFrame) -> pd.DataFrame:
         d = all_rows["g_df"].to_numpy(np.float64)
-        all_rows["idf"] = np.log(1.0 + (N - d + 0.5) / (d + 0.5))
+        n = (
+            all_rows["n_docs"].to_numpy(np.float64)
+            if "n_docs" in all_rows.columns
+            else N
+        )
+        all_rows["idf"] = np.log(1.0 + (n - d + 0.5) / (d + 0.5))
         return all_rows
 
     return add_idf
@@ -1089,9 +1114,13 @@ QUERY_TASK_ROWS_DEFAULT = 100_000
 
 
 def query_task_rows() -> int:
-    """Cached rows per warm query task, from $TANGENT_QUERY_TASK_ROWS.
-    A value that is not a positive integer falls back to the default
-    (with a warning) instead of failing Searcher start-up."""
+    """The per-task budget of a query, from $TANGENT_QUERY_TASK_ROWS:
+    cached rows per warm query task (Searcher.query_tasks), and the
+    postings (summed global df of its index terms) a cold query may
+    hold and still be scored in one task without a shard shuffle
+    (_cold_tasks). A value that is not a positive integer falls back
+    to the default (with a warning) instead of failing Searcher
+    start-up."""
     raw = os.environ.get("TANGENT_QUERY_TASK_ROWS")
     if raw is None:
         return QUERY_TASK_ROWS_DEFAULT
@@ -1290,7 +1319,6 @@ class Searcher:
         resident lexicon lookup and the query task wave."""
         return dict(
             postings=self.postings,
-            term_stats=self.term_stats,
             n_docs=self.n_docs,
             avgdl=self.avgdl,
             deleted=self.deleted,

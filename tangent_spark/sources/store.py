@@ -18,8 +18,8 @@ Layout under <root>/:
     terms/        (parquet)        -- stage 'terms':    doc_id, term, tf, dl
     term_stats/   (parquet)        -- stage 'stats':    term, df, cf
     corpus_stats/ (parquet)        -- stage 'stats':    n_docs, avgdl, total_tokens
-    postings/     (parquet, partitioned by shard)
-                                   -- stage 'postings': compressed blocks
+    postings/     (parquet, term-sorted runs; shard is a column, not
+                   a directory)    -- stage 'postings': compressed blocks
     docs/         (parquet)        -- stage 'docs':     doc_id, url (dictionary)
     metrics/      (parquet)        -- per-shard lineage counters
     tombstones/   (parquet)        -- stages 'delete_<id>': doc_id marks

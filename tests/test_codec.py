@@ -69,3 +69,47 @@ def test_posting_list_roundtrip(n, block_size, base):
             lo, hi = i * block_size, min((i + 1) * block_size, n)
             assert bound[i] >= tfn[lo:hi].max() - 1e-12
             assert fd[i] == ids[lo]
+
+
+def test_batch_run_encoder_matches_encode_posting_list():
+    """The build's run encoder (codec.encode_runs under
+    indexer._encode_runs) is byte-identical to encode_posting_list run
+    by run: run lengths 1, block_size and block_size + 1, a run split
+    across two Arrow batches, and doc ids near 2^62."""
+    import pandas as pd
+
+    from tangent_spark.config import IndexConfig
+    from tangent_spark.plans.indexer import _encode_runs
+
+    bs = 8
+    rng = np.random.default_rng(11)
+    lens = [1, bs, bs + 1, 3 * bs + 5, 1, bs, 2, bs + 1]
+    frames = []
+    for i, n in enumerate(lens):
+        base = 2**62 - 20 * n if i % 3 == 0 else int(rng.integers(0, 10**6))
+        ids = np.sort(rng.choice(np.arange(base, base + 10 * n), n, replace=False))
+        frames.append(pd.DataFrame({
+            "shard": np.int32(i % 2), "term": f"t{i // 2:02d}",
+            "doc_id": ids.astype(np.int64),
+            "tf": rng.integers(1, 300, n).astype(np.int32),
+            "dl": rng.integers(1, 10**5, n).astype(np.int64),
+        }))
+    rows = pd.concat(frames, ignore_index=True)
+    # split inside the 3*bs+5 run: it must be carried across the batches
+    cut = sum(lens[:3]) + 2 * bs
+    batches = [rows.iloc[:cut], rows.iloc[cut:]]
+    out = pd.concat(list(_encode_runs(IndexConfig(block_size=bs))(iter(batches))),
+                    ignore_index=True)
+    assert len(out) == len(lens)
+    names = ["first_docs", "max_tfs", "min_dls", "counts", "docs_blob",
+             "tfs_blob", "dls_blob", "d_cuts", "t_cuts", "l_cuts"]
+    for i, f in enumerate(frames):
+        got = out.iloc[i]
+        assert (got["shard"], got["term"]) == (f["shard"][0], f["term"][0])
+        ids, tfs, dls = (f[c].to_numpy(np.int64) for c in ("doc_id", "tf", "dl"))
+        want = encode_posting_list(ids, tfs, dls, bs)
+        for name, w in zip(names, want):
+            assert got[name] == (w if isinstance(w, bytes) else w.tolist()), (i, name)
+        assert (got["df"], got["cf"], got["max_doc"]) == (
+            len(ids), int(tfs.sum()), int(ids[-1])
+        )

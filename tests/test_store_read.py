@@ -19,8 +19,10 @@ from tangent_spark.corpus import generate_pages, pages_with_doc_ids
 from tangent_spark.functions.tokenize import tokenize_porter
 from tangent_spark.oracle import bm25_rank
 from tangent_spark.plans.indexer import build_index
+from tangent_spark.plans.boolean import boolean_topk
 from tangent_spark.plans.search import (
     QUERY_TASK_ROWS_DEFAULT,
+    Searcher,
     bm25_topk_synonyms,
     bm25_topk_wand,
     boosted_topk,
@@ -164,44 +166,44 @@ def test_cold_queries_follow_every_commit(spark, pages, texts_by_url, tmp_path):
 
 # every cold BM25 variant and the Spark jobs of its repeat call
 COLD_BM25 = {
-    "plain": (lambda spark, st: bm25_topk_wand(spark, st, BM25_Q, K), 3),
+    "plain": (lambda spark, st: bm25_topk_wand(spark, st, BM25_Q, K), 2),
     "term_boost": (
         lambda spark, st: bm25_topk_wand(spark, st, "matrix^2 convergence theorem", K),
-        3,
+        2,
     ),
-    "cursor": (lambda spark, st: bm25_topk_wand(spark, st, BM25_Q, K, after=(1.0, 5)), 3),
-    # + the synonym-member broadcast and the group max-df aggregate
+    "cursor": (lambda spark, st: bm25_topk_wand(spark, st, BM25_Q, K, after=(1.0, 5)), 2),
     "synonyms": (
         lambda spark, st: bm25_topk_synonyms(spark, st, BM25_Q, K, {"matrix": ["tensor"]}),
-        6,
+        2,
     ),
     # + the source doc's term selection
-    "more_like_this": (lambda spark, st: more_like_this(spark, st, 5, K), 5),
+    "more_like_this": (lambda spark, st: more_like_this(spark, st, 5, K), 4),
     # + the doc -> weight map
     "boosted": (
         lambda spark, st: boosted_topk(
             spark, st, BM25_Q, K, "warc_ts", datetime.datetime(2025, 6, 1)
         ),
-        4,
+        3,
     ),
     "function_boosted": (
         lambda spark, st: function_boosted_topk(
             spark, st, BM25_Q, K, "1.0 + 0.05 * ln(1 + length(url))"
         ),
-        4,
+        3,
     ),
     # + the pattern expansion over the vocabulary
-    "wildcard": (lambda spark, st: wildcard_topk(spark, st, WILD_Q, K), 4),
+    "wildcard": (lambda spark, st: wildcard_topk(spark, st, WILD_Q, K), 3),
 }
 
 
 @pytest.mark.parametrize("variant", list(COLD_BM25))
 def test_warm_cold_bm25_job_count(spark, pages, tmp_path, variant):
     """With handles, corpus stats and tombstones memoized, a repeat cold
-    BM25 query runs only its own plan's jobs: the broadcast of the
-    query-term idf rows, the shard shuffle map stage and the result
-    stage — plus, for a variant, the bounded jobs that build its query
-    (noted in COLD_BM25)."""
+    BM25 query runs only its own plan's jobs: the collect of the
+    query terms' df and the one-task result stage (the query's postings
+    fit query_task_rows, so there is no shard shuffle) — plus, for a
+    variant, the bounded jobs that build its query (noted in
+    COLD_BM25)."""
     run, jobs = COLD_BM25[variant]
     store = _build(spark, pages, str(tmp_path / "idx"))
     want = _rows(run(spark, store))
@@ -214,6 +216,114 @@ def test_warm_cold_bm25_job_count(spark, pages, tmp_path, variant):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert got == want
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+
+
+# an index whose shards hold several runs per term (a base build plus an
+# appended batch) and tombstones, with positions for phrase clauses
+RUNS_CFG = IndexConfig(n_shards=4, block_size=16, store_positions=True)
+RUNS_BASE = 150
+RUNS_ALL = 200
+BOOL_Q = "matrix +theorem -vector"
+PHRASE_Q = 'matrix +theorem "convergence theorem"'
+SMALL_COLD = {
+    "bm25": lambda spark, st: bm25_topk_wand(spark, st, BM25_Q, K),
+    "boolean": lambda spark, st: boolean_topk(spark, st, BOOL_Q, K),
+    "boolean_phrase": lambda spark, st: boolean_topk(spark, st, PHRASE_Q, K),
+}
+TOPK_QUERIES = [
+    BM25_Q,
+    "matrix^2 convergence theorem",
+    "proof of the prime theorem",
+    "spark^1.5 index query^3",
+    "graph algebra tensor limit series",
+    "kernel^0.5 entropy manifold operator",
+]
+
+
+@pytest.fixture(scope="module")
+def runs_store(spark, tmp_path_factory):
+    pages = pages_with_doc_ids(generate_pages(spark, RUNS_ALL, partitions=4)).persist()
+    store = build_index(
+        spark, pages.filter(F.col("doc_id") < RUNS_BASE),
+        str(tmp_path_factory.mktemp("runs") / "idx"), RUNS_CFG, url_col="url",
+    )
+    append_batch(
+        spark, store, pages.filter(F.col("doc_id") >= RUNS_BASE).drop("doc_id"), 1
+    )
+    top = bm25_topk_wand(spark, store, BM25_Q, 3).collect()
+    delete_docs(spark, store, [int(r["doc_id"]) for r in top], 1)
+    pages.unpersist()
+    runs = (
+        store.read(spark, "postings")
+        .filter(F.col("term").isin(["matrix", "theorem"]))
+        .groupBy("shard", "term")
+        .count()
+    )
+    assert runs.filter(F.col("count") > 1).count() > 0
+    return store
+
+
+def _exchanges(df):
+    """The Exchange nodes of `df`'s executed plan, broadcasts excluded."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        line.strip() for line in plan.splitlines()
+        if "Exchange" in line and "BroadcastExchange" not in line
+    ]
+
+
+def _repeat(spark, run, store, group):
+    """(rows, executed-plan exchanges, Spark jobs) of a repeat call."""
+    run(spark, store).collect()
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "repeat cold query")
+    try:
+        df = run(spark, store)
+        rows = [(int(r["doc_id"]), repr(r["score"])) for r in df.collect()]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return rows, _exchanges(df), jobs
+
+
+@pytest.mark.parametrize("variant", list(SMALL_COLD))
+def test_small_cold_query_runs_in_one_task(spark, runs_store, monkeypatch, variant):
+    """A cold query whose postings fit query_task_rows() scores its
+    matched rows in one task that regroups them by shard: no shard
+    shuffle. TANGENT_QUERY_TASK_ROWS=1 brings the shuffle back, with
+    identical rows. A phrase clause keeps its positional joins."""
+    run = SMALL_COLD[variant]
+    rows, exchanges, jobs = _repeat(spark, run, runs_store, f"one-task-{variant}")
+    assert rows
+    if variant == "boolean_phrase":
+        assert not [e for e in exchanges if "hashpartitioning(shard" in e]
+    else:
+        assert exchanges == []
+    monkeypatch.setenv("TANGENT_QUERY_TASK_ROWS", "1")
+    rows_s, exchanges_s, jobs_s = _repeat(
+        spark, run, runs_store, f"shuffle-{variant}"
+    )
+    assert rows_s == rows
+    assert [e for e in exchanges_s if "hashpartitioning(shard" in e]
+    assert jobs_s == jobs + 1
+    if variant == "bm25":
+        assert (jobs, jobs_s) == (2, 3)
+
+
+def test_cold_bm25_equals_warm_bit_for_bit(spark, runs_store):
+    """Cold and warm rows carry the same global df and reach the kernel
+    in the same term order, so their scores are repr-identical."""
+    searcher = Searcher(spark, runs_store)
+    try:
+        for q in TOPK_QUERIES:
+            cold = bm25_topk_wand(spark, runs_store, q, K).collect()
+            warm = searcher.topk(q, K).collect()
+            assert cold, q
+            assert [(r["doc_id"], repr(r["score"])) for r in cold] == [
+                (r["doc_id"], repr(r["score"])) for r in warm
+            ], q
+    finally:
+        searcher.close()
 
 
 @pytest.mark.parametrize(
